@@ -19,6 +19,12 @@ al. 2023 SemDeDup cluster sharding; Sennrich et al. 2016 BPE).
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -226,16 +232,20 @@ def stratified_exact_n(
 
 def _overlap(*thunks):
     """Run independent Spark actions from a small driver thread pool
-    (guide §2.6 "overlap independent jobs" — curation_pipeline._overlap's
-    twin for this module): actions are only sequential because driver
+    (guide §2.6 "overlap independent jobs"; the package's one driver
+    thread pool — the curation funnel and the composite ANN store
+    builders use it too): actions are only sequential because driver
     code calls them sequentially, so two independent eager
     materializations can share the cluster instead of each paying full
     scheduler latency back to back. Each thunk computes a frame
     byte-identical to its sequential form (independent inputs, no shared
     mutable state); only the wall-clock interleaving changes. Results in
-    thunk order; the first exception propagates."""
+    thunk order; the first exception propagates. A lone thunk runs
+    inline, so its jobs keep the calling thread's job group."""
     from concurrent.futures import ThreadPoolExecutor
 
+    if len(thunks) == 1:
+        return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]
@@ -2608,6 +2618,19 @@ def _store_slices(subs: list[str], before_bid: int | None) -> list[str]:
     ]
 
 
+def _read_slices(spark, path: str, before_bid: int | None = None) -> DataFrame:
+    """Union of a per-batch-keyed store's readable slices. Stores are
+    laid out one subdirectory per writer (base + one per micro-batch)
+    so replays overwrite in place; the recursive read unions whatever
+    subset exists, with ``before_bid`` as in :func:`_store_slices`.
+    Crash recovery runs first: a compacted store may carry a crashed
+    compaction's leftovers, and the plain listing would miss rows
+    renamed to ``_old_`` before the promote."""
+    recover_store_slices(path)
+    subs = _store_slices(sorted(os.listdir(path)), before_bid)
+    return spark.read.parquet(*(os.path.join(path, s) for s in subs))
+
+
 def streaming_incremental_dedup(
     spark,
     docs: DataFrame,
@@ -2643,11 +2666,6 @@ def streaming_incremental_dedup(
         # statuses dir, and surface as a FileNotFoundError from the
         # final listing (and `% (2*n_batches)` degenerates besides).
         raise ValueError(f"n_batches must be >= 1, got {n_batches}")
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-
     from parallel_map_reduce_spark.operators.dedup import minhash_signatures
     from parallel_map_reduce_spark.streaming.windowed import stream_docs_dir
 
@@ -2659,16 +2677,6 @@ def streaming_incremental_dedup(
         sig_store = os.path.join(run_dir, "kept_sigs")
         out = os.path.join(run_dir, "statuses")
         os.makedirs(stage)
-
-        def _read_all(path: str, before_bid: int | None = None) -> DataFrame:
-            # Stores are laid out one subdirectory per writer (base +
-            # one per micro-batch) so replays overwrite in place; the
-            # recursive read unions whatever subset exists.  With
-            # ``before_bid`` set, only slices written by STRICTLY EARLIER
-            # micro-batches are read — a retried batch must not dedup
-            # against its own stale partial output (or a later batch's).
-            subs = _store_slices(sorted(os.listdir(path)), before_bid)
-            return spark.read.parquet(*(os.path.join(path, s) for s in subs))
 
         # Base kept corpus (even ids) seeds the text AND signature stores.
         base = docs.filter(F.col(id_col) % 2 == 0)
@@ -2684,7 +2692,7 @@ def streaming_incremental_dedup(
             docs.filter(
                 F.col(id_col) % mod == 2 * k - 1
             ).coalesce(1).write.parquet(tmp_out)
-            (part,) = _glob.glob(os.path.join(tmp_out, "part-*.parquet"))
+            (part,) = glob.glob(os.path.join(tmp_out, "part-*.parquet"))
             dst = os.path.join(stage, f"batch_{k}.parquet")
             os.replace(part, dst)
             os.utime(dst, (k, k))
@@ -2694,7 +2702,7 @@ def streaming_incremental_dedup(
             # engine's batch id and overwritten, so a micro-batch replay
             # rewrites its own slice instead of appending duplicates into
             # the admission chain.
-            kept = _read_all(store, before_bid=bid)
+            kept = _read_slices(spark, store, before_bid=bid)
             # Materialized: the status write AND the survivor filter both
             # consume res — without the checkpoint the verification joins
             # and component formation replay once per consumer.
@@ -2704,7 +2712,7 @@ def streaming_incremental_dedup(
                     kept,
                     text_col=text_col,
                     id_col=id_col,
-                    kept_signatures=_read_all(sig_store, before_bid=bid),
+                    kept_signatures=_read_slices(spark, sig_store, before_bid=bid),
                 )
                 .withColumn(
                     "batch_id", ((F.col(id_col) % mod + 1) / 2).cast("long")
@@ -2732,7 +2740,7 @@ def streaming_incremental_dedup(
             .start()
         )
         q.awaitTermination()
-        return _read_all(out).localCheckpoint(eager=True)
+        return _read_slices(spark, out).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
@@ -3037,6 +3045,7 @@ SELECT doc_id, 'readmit' AS phase, status, dup_of FROM res2
 _STORE_LOCK_NAME = "_lock"
 
 
+@contextlib.contextmanager
 def store_lock(path: str, timeout: float = 600.0, poll: float = 0.05):
     """Exclusive advisory lock serializing the recover/compact critical
     section on one store — the enforcement of the quiesced-store
@@ -3068,41 +3077,35 @@ def store_lock(path: str, timeout: float = 600.0, poll: float = 0.05):
     call ``_recover_store_slices_locked`` (not the locking wrapper) —
     a second acquire on the same path would deadlock against itself.
     """
-    import contextlib
     import fcntl
-    import os
     import time
 
-    @contextlib.contextmanager
-    def _cm():
-        fd = os.open(
-            os.path.join(path, _STORE_LOCK_NAME),
-            os.O_CREAT | os.O_RDWR,
-            0o644,
-        )
-        try:
-            deadline = time.monotonic() + timeout
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except (BlockingIOError, InterruptedError):
-                    if time.monotonic() >= deadline:
-                        raise TimeoutError(
-                            f"store {path}: lock held past {timeout}s — "
-                            "an in-flight compaction/recovery is wedged "
-                            "or the store is busier than the quiesced-"
-                            "store contract allows"
-                        )
-                    time.sleep(poll)
+    fd = os.open(
+        os.path.join(path, _STORE_LOCK_NAME),
+        os.O_CREAT | os.O_RDWR,
+        0o644,
+    )
+    try:
+        deadline = time.monotonic() + timeout
+        while True:
             try:
-                yield
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except (BlockingIOError, InterruptedError):
+                if time.monotonic() >= deadline:
+                    raise TimeoutError(
+                        f"store {path}: lock held past {timeout}s — "
+                        "an in-flight compaction/recovery is wedged "
+                        "or the store is busier than the quiesced-"
+                        "store contract allows"
+                    )
+                time.sleep(poll)
+        try:
+            yield
         finally:
-            os.close(fd)
-
-    return _cm()
+            fcntl.flock(fd, fcntl.LOCK_UN)
+    finally:
+        os.close(fd)
 
 
 def recover_store_slices(path: str, lock_timeout: float = 600.0) -> str:
@@ -3153,8 +3156,6 @@ def recover_store_slices(path: str, lock_timeout: float = 600.0) -> str:
     both under the lock) so the branch decision and the slice set
     reflect one consistent observation of the store.
     """
-    import os
-
     names = os.listdir(path)
     has_markers = "_compact" in names or any(
         s.startswith("_old_") for s in names
@@ -3170,9 +3171,6 @@ def _recover_store_slices_locked(path: str) -> str:
     :func:`store_lock` on ``path`` (compactors call this directly from
     inside their own locked section; everyone else goes through the
     locking wrapper)."""
-    import os
-    import shutil
-
     tmp = os.path.join(path, "_compact")
     if os.path.isdir(tmp):
         olds = sorted(s for s in os.listdir(path) if s.startswith("_old_"))
@@ -3224,14 +3222,10 @@ def compact_store_slices(
     generation BACK (pre-promote crash) or clears the dead renames
     (post-promote crash) — never deleting a sole copy. Readers that
     may open a store between a crash and the next compaction call the
-    same recovery first (see the ``_read_all`` helpers).
+    same recovery first (see :func:`_read_slices`). The swap is
+    :func:`_store_compaction`'s, shared with the ANN store compactors.
     """
-    import os
-    import shutil
-
-    with store_lock(path, timeout=lock_timeout):
-        _recover_store_slices_locked(path)
-        tmp = os.path.join(path, "_compact")
+    with _store_compaction(path, lock_timeout) as (tmp, swap):
         subs = sorted(
             s for s in os.listdir(path) if not s.startswith("_")
         )
@@ -3240,16 +3234,35 @@ def compact_store_slices(
         spark.read.parquet(
             *(os.path.join(path, s) for s in subs)
         ).write.mode("overwrite").parquet(tmp)
-        for s in subs:
-            os.replace(
-                os.path.join(path, s), os.path.join(path, "_old_" + s)
-            )
-        os.replace(tmp, os.path.join(path, "base"))
-        for s in subs:
-            shutil.rmtree(
-                os.path.join(path, "_old_" + s), ignore_errors=True
-            )
+        swap(subs, "base")
         return len(subs)
+
+
+@contextlib.contextmanager
+def _store_compaction(path: str, lock_timeout: float = 600.0):
+    """The one crash-safe compaction swap every persisted store uses —
+    the dedup slice stores (compact_store_slices) and the ANN stores'
+    ``codes``/``invfile`` tables (similarity.compact_ivf_index /
+    compact_pq_index). Holds :func:`store_lock` for the whole critical
+    section and runs the locked recovery first, then yields
+    ``(tmp, swap)``: the caller writes the new generation into ``tmp``
+    (``<path>/_compact``) and calls ``swap(live, target)``, which
+    renames each ``live`` dir to ``_old_<name>``, promotes ``tmp`` to
+    ``target``, and only then deletes the ``_old_`` dirs — the order
+    :func:`recover_store_slices` relies on to tell a pre-promote crash
+    (roll back) from a post-promote one (clear dead renames)."""
+    with store_lock(path, timeout=lock_timeout):
+        _recover_store_slices_locked(path)
+        tmp = os.path.join(path, "_compact")
+
+        def swap(live: list[str], target: str) -> None:
+            for s in live:
+                os.replace(os.path.join(path, s), os.path.join(path, "_old_" + s))
+            os.replace(tmp, os.path.join(path, target))
+            for s in live:
+                shutil.rmtree(os.path.join(path, "_old_" + s), ignore_errors=True)
+
+        yield tmp, swap
 
 
 def incremental_lsh_dedup_compacted(
@@ -3284,10 +3297,6 @@ def incremental_lsh_dedup_compacted(
         raise ValueError(
             f"compact_after must be in [1, {n_batches}], got {compact_after}"
         )
-    import os
-    import shutil
-    import tempfile
-
     from parallel_map_reduce_spark.operators.dedup import minhash_signatures
 
     mod = 2 * n_batches
@@ -3296,14 +3305,6 @@ def incremental_lsh_dedup_compacted(
         store = os.path.join(run_dir, "kept_store")
         sig_store = os.path.join(run_dir, "kept_sigs")
         out = os.path.join(run_dir, "statuses")
-
-        def _read_all(path: str) -> DataFrame:
-            # A compacted store may carry a crashed compaction's
-            # leftovers; recovery first, or the plain listing would
-            # miss rows renamed to _old_ before the promote.
-            recover_store_slices(path)
-            subs = _store_slices(sorted(os.listdir(path)), None)
-            return spark.read.parquet(*(os.path.join(path, s) for s in subs))
 
         base = docs.filter(F.col(id_col) % 2 == 0)
         base.write.parquet(os.path.join(store, "base"))
@@ -3316,10 +3317,10 @@ def incremental_lsh_dedup_compacted(
             res = (
                 incremental_lsh_dedup(
                     batch_df,
-                    _read_all(store),
+                    _read_slices(spark, store),
                     text_col=text_col,
                     id_col=id_col,
-                    kept_signatures=_read_all(sig_store),
+                    kept_signatures=_read_slices(spark, sig_store),
                 )
                 .withColumn(
                     "batch_id", ((F.col(id_col) % mod + 1) / 2).cast("long")
@@ -3350,6 +3351,6 @@ def incremental_lsh_dedup_compacted(
                             f"compaction folded {folded} slices at {p}, "
                             f"expected {expected}"
                         )
-        return _read_all(out).localCheckpoint(eager=True)
+        return _read_slices(spark, out).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)

@@ -1957,7 +1957,7 @@ def q_semantic_dedup_keep_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id space). Labels can't cross the offset boundary (components
     # only connect via edges), so the split results are identical to
     # two separate runs at half the loop cost.
-    from concurrent.futures import ThreadPoolExecutor
+    from parallel_map_reduce_spark.operators.curation_extras import _overlap
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1985,11 +1985,7 @@ def q_semantic_dedup_keep_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(_exact_edges)
-        f_ann = pool.submit(_ann_edges)
-        exact_edges = f_exact.result()
-        ann_edges = f_ann.result()
+    exact_edges, ann_edges = _overlap(_exact_edges, _ann_edges)
     off = F.lit(1 << 40)
     joint = exact_edges.unionByName(
         ann_edges.select(

@@ -19,13 +19,13 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from parallel_map_reduce_spark.functions.hashing import hash64
 from parallel_map_reduce_spark.functions.vectors import (
     cosine,
     dot,
@@ -460,75 +460,419 @@ def _write_store_rows(path: str, rows: list[dict], schema) -> None:
     )
 
 
-def _centroids_pa_schema():
+# ---------------------------------------------------------------------------
+# Persisted ANN stores: one coarse layout × one codec
+# ---------------------------------------------------------------------------
+#
+# Every stored index composes a coarse LAYOUT — flat (the corpus in
+# ``<path>/codes``) or IVF (``<path>/centroids`` plus the corpus
+# partitioned BY cid in ``<path>/invfile``) — with a CODEC: float
+# vectors, PQ codes with an optional OPQ rotation, or SQ8 bytes, whose
+# model is the ``<path>/model`` row. One builder, one writer (build and
+# append), one opener (crash recovery + sidecars) and one compaction
+# swap serve every combination; the public *_build_index,
+# *_append_to_index, *_query_stored and compact_* functions are
+# compositions of them (README has the table).
+
+
+class _Store(NamedTuple):
+    """A persisted store's layout × codec with its driver-sized models.
+
+    ``cmat`` — the IVF centroid matrix (cid-ordered), None for flat.
+    ``pq`` — (codebook (m, codes, sub_dim), OPQ rotation or None); model
+    row (m, codes, sub_dim, codebook, rotation); data columns (norm,
+    code array<int>). ``sq`` — (vmin, guarded scale); model row (dim,
+    vmin, scale); data columns (norm, code array<tinyint>). Neither —
+    float vectors; data columns (vec, *meta_cols)."""
+
+    path: str
+    cmat: np.ndarray | None = None
+    pq: tuple[np.ndarray, np.ndarray | None] | None = None
+    sq: tuple[np.ndarray, np.ndarray] | None = None
+
+    @property
+    def data(self) -> str:
+        return f"{self.path}/{'codes' if self.cmat is None else 'invfile'}"
+
+    def sq_lits(self) -> tuple[Column, Column]:
+        """(mins, scales) as plan literals built from the EXACT stored
+        doubles — bit-stability is what pins stored SQ == sq_ann."""
+        return tuple(F.array(*[F.lit(float(v)) for v in a]) for a in self.sq)
+
+
+def _write_sidecars(st: _Store) -> None:
+    """Persist the centroid table and the codec's model row driver-side
+    (r13: KB-scale, no Spark write job), and drop a sidecar a previous
+    build at the same path left that this composition lacks — the
+    opener reads the layout × codec off the sidecars."""
     import pyarrow as pa
 
-    return pa.schema(
-        [("cid", pa.int32()), ("center", pa.list_(pa.float64()))]
+    i32, f64s = pa.int32(), pa.list_(pa.float64())
+    if st.cmat is None:
+        shutil.rmtree(f"{st.path}/centroids", ignore_errors=True)
+    else:
+        _write_store_rows(
+            f"{st.path}/centroids",
+            [{"cid": i, "center": c.tolist()} for i, c in enumerate(st.cmat)],
+            pa.schema([("cid", i32), ("center", f64s)]),
+        )
+    if st.pq is not None:
+        cb, rot = st.pq
+        m, codes, sub_dim = cb.shape
+        row = {"m": m, "codes": codes, "sub_dim": sub_dim}
+        schema = [(name, i32) for name in row]
+        row["codebook"] = cb.ravel().tolist()
+        row["rotation"] = None if rot is None else rot.ravel().tolist()
+        schema += [("codebook", f64s), ("rotation", f64s)]
+    elif st.sq is not None:
+        vmin, scale = st.sq
+        row = {"dim": len(vmin), "vmin": vmin.tolist(), "scale": scale.tolist()}
+        schema = [("dim", i32), ("vmin", f64s), ("scale", f64s)]
+    else:
+        shutil.rmtree(f"{st.path}/model", ignore_errors=True)
+        return
+    _write_store_rows(f"{st.path}/model", [row], pa.schema(schema))
+
+
+def _open_store(path: str) -> _Store:
+    """The one entry every stored reader and appender opens a store
+    through. Compaction crash recovery runs first: a crashed compaction
+    may have renamed the live data dir to ``_old_<name>``, and reading
+    past that misses rows while appending beside it creates an
+    unrecoverable both-exist state. Then the sidecars load driver-side
+    (no Spark job) and name the layout × codec. Stored reads and
+    appends must not run concurrently with a compaction (quiesced-store
+    contract, see curation_extras.recover_store_slices)."""
+    from parallel_map_reduce_spark.operators.curation_extras import (
+        recover_store_slices,
     )
 
-
-def _write_centroids(path: str, centers: list[list[float]]) -> None:
-    _write_store_rows(
-        f"{path}/centroids",
-        [{"cid": i, "center": c} for i, c in enumerate(centers)],
-        _centroids_pa_schema(),
-    )
-
-
-def _read_centroid_matrix(path: str) -> np.ndarray:
-    """The (k, dim) centroid matrix from a stored index, cid-ordered —
-    the shape every reader/appender rebuilt from its sorted collect."""
-    crows = sorted(_read_store_rows(f"{path}/centroids"), key=lambda r: r["cid"])
-    return np.array([r["center"] for r in crows])
-
-
-def _pq_model_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("m", pa.int32()),
-            ("codes", pa.int32()),
-            ("sub_dim", pa.int32()),
-            ("codebook", pa.list_(pa.float64())),
-            ("rotation", pa.list_(pa.float64())),
-        ]
-    )
+    recover_store_slices(path)
+    cmat = pq = sq = None
+    if os.path.isdir(f"{path}/centroids"):
+        rows = sorted(_read_store_rows(f"{path}/centroids"), key=lambda r: r["cid"])
+        cmat = np.array([r["center"] for r in rows])
+    if os.path.isdir(f"{path}/model"):
+        row = _read_store_rows(f"{path}/model")[0]
+        if "vmin" in row:
+            sq = (np.array(row["vmin"]), np.array(row["scale"]))
+        else:
+            m, sub_dim = row["m"], row["sub_dim"]
+            cb = np.array(row["codebook"]).reshape(m, row["codes"], sub_dim)
+            rot = row["rotation"]
+            if rot is not None:
+                rot = np.array(rot).reshape(m * sub_dim, m * sub_dim)
+            pq = (cb, rot)
+    return _Store(path, cmat, pq, sq)
 
 
-def _write_pq_model(
-    path: str, m: int, codes: int, cb: np.ndarray, rot: np.ndarray | None
+def _build_store(
+    embeddings: DataFrame,
+    path: str,
+    num_centroids: int | None = None,
+    codec: str | None = None,
+    m: int = 8,
+    codes: int = 32,
+    shared_codebook: bool | None = None,
+    rotation: bool = False,
+    n_iter: int = 8,
+    max_iter: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    train_cap: int | None = DEFAULT_TRAIN_CAP,
+    meta_cols: tuple[str, ...] = (),
 ) -> None:
-    _write_store_rows(
-        f"{path}/model",
-        [
-            {
-                "m": int(m),
-                "codes": int(codes),
-                "sub_dim": int(cb.shape[2]),
-                "codebook": [float(x) for x in cb.ravel()],
-                "rotation": (
-                    [float(x) for x in rot.ravel()] if rot is not None else None
-                ),
-            }
-        ],
-        _pq_model_pa_schema(),
+    """The one store builder. Fits the coarse quantizer
+    (``num_centroids`` k-means cells; None = flat layout) and the codec
+    (None = float vectors, ``"pq"`` — behind the OPQ rotation with
+    ``rotation=True`` — or ``"sq"``), persists the sidecars, then
+    writes the encoded corpus once.
+
+    Both quantizers train on the bounded deterministic sample
+    (``train_cap``, see _cap_train_set). When both exist they fit
+    CONCURRENTLY through curation_extras._overlap (r13, guide §2.6): the
+    second fit's jobs back-fill the first's executor tail, and each fit
+    sees exactly the frame it would see alone, so both models are
+    bit-identical to a sequential fit. A PQ codec pays one probe job
+    for the row count and dimensionality its trainer and the coarse cap
+    filter share (r13, guide §1.2)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from parallel_map_reduce_spark.operators.curation_extras import _overlap
+
+    if codec == "pq":
+        shared_codebook = _resolve_shared_codebook(shared_codebook, rotation)
+    base = embeddings.select(
+        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec"), *meta_cols
+    )
+    n = dim = None
+    if codec == "pq" and (train_cap is not None or not rotation):
+        probe = base.agg(
+            F.count(F.lit(1)).alias("n"), F.first(F.size("vec")).alias("d")
+        ).first()
+        n, dim = probe["n"], probe["d"]
+
+    def fit_coarse():
+        train = _cap_train_set(base, F.col("vec"), train_cap, n=n).select(
+            array_to_vector(F.col("vec")).alias("features")
+        )
+        model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
+        return np.array([list(map(float, c)) for c in model.clusterCenters()])
+
+    def fit_codec():
+        if codec == "sq":
+            vmin, vmax = sq_train(embeddings, vec_col=vec_col)
+            scale = (vmax - vmin) / 255.0
+            scale[scale == 0.0] = 1.0
+            return vmin, scale
+        fit = dict(m=m, codes=codes, vec_col=vec_col, train_cap=train_cap, n=n)
+        if rotation:
+            rot, cb = opq_train(embeddings, n_iter=n_iter, **fit)
+            return cb, rot
+        return pq_train_codebooks(
+            embeddings, shared=shared_codebook, dim=dim, **fit
+        ), None
+
+    fits = {}
+    if num_centroids is not None:
+        fits["cmat"] = fit_coarse
+    if codec is not None:
+        fits[codec] = fit_codec
+    st = _Store(path, **dict(zip(fits, _overlap(*fits.values()))))
+    _write_sidecars(st)
+    _write_vectors(st, embeddings, "overwrite", id_col, vec_col, meta_cols)
+
+
+def _write_vectors(
+    st: _Store,
+    embeddings: DataFrame,
+    mode: str,
+    id_col: str,
+    vec_col: str,
+    meta_cols: tuple[str, ...] = (),
+) -> None:
+    """The one store writer, for the build (``overwrite``) and every
+    append (``append``): ONE narrow projection encodes each vector
+    against the store's FIXED models — the codec's columns, any
+    ``meta_cols`` persisted alongside, and under the IVF layout the
+    nearest stored cell — then one parquet write, partitionBy(cid) for
+    IVF. Appends never retrain (FAISS's add-after-train contract): cell
+    boundaries and code words stay fixed, so no existing row is read,
+    reassigned or re-encoded, and out-of-range SQ dims clip; drift vs.
+    the training sample is the rebuild-cadence knob. Each append adds
+    one file per touched cell (or one code-table file set) until
+    compaction folds them."""
+    base = embeddings.select(
+        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec"), *meta_cols
+    )
+    vec = F.col("vec")
+    cols = [vec]
+    if st.pq is not None:
+        encode, _ = _pq_udfs(*st.pq)
+        cols = [_vec_norm().alias("norm"), encode(vec).alias("code")]
+    elif st.sq is not None:
+        code = _sq_encode_expr(vec, *st.sq_lits())
+        cols = [_vec_norm().alias("norm"), code.alias("code")]
+    cols = [id_col, *cols, *meta_cols]
+    if st.cmat is None:
+        base.select(*cols).write.mode(mode).parquet(st.data)
+        return
+    nearest_cid, _ = _ivf_udfs(st.cmat, 1)
+    base.select(*cols, nearest_cid(vec).alias("cid")).write.mode(
+        mode
+    ).partitionBy("cid").parquet(st.data)
+
+
+def _compact_store(
+    spark, path: str, target_bytes: int = 128 << 20, lock_timeout: float = 600.0
+) -> tuple[int, int]:
+    """Fold a store's accumulated append files, returning (files_before,
+    files_after): the IVF ``invfile`` back to ONE file per non-empty
+    cell (repartition BY cid — every cell's rows land in one task), the
+    flat ``codes`` table into ceil(total_bytes / target_bytes) files.
+    Row content is exact — no retrain, no reassignment, no re-encode —
+    so stored answers are bit-identical before and after. The rewrite
+    stages in ``_compact`` and swaps in through the shared
+    curation_extras._store_compaction (lock → recover → stage → rename
+    live to ``_old_`` → promote → delete), whose crash states the next
+    _open_store heals."""
+    import math
+
+    from parallel_map_reduce_spark.operators.curation_extras import (
+        _store_compaction,
+    )
+
+    with _store_compaction(path, lock_timeout) as (tmp, swap):
+        ivf = os.path.isdir(f"{path}/invfile")
+        live = "invfile" if ivf else "codes"
+        pattern = f"{path}/{live}/{'cid=*/' if ivf else ''}*.parquet"
+        before = glob.glob(pattern)
+        table = spark.read.parquet(f"{path}/{live}")
+        if ivf:
+            table.repartition("cid").write.partitionBy("cid").parquet(tmp)
+        else:
+            total = sum(os.path.getsize(f) for f in before)
+            nparts = max(1, math.ceil(total / target_bytes))
+            table.repartition(nparts).write.parquet(tmp)
+        swap([live], live)
+        return len(before), len(glob.glob(pattern))
+
+
+def _probes(
+    src: DataFrame, cmat: np.ndarray, query_ids, nprobe: int, id_col: str, *extra
+) -> DataFrame:
+    """(query_id, qvec, *extra, cid) — each query's ``nprobe`` nearest
+    stored cells, selected by the shared Arrow distance UDF over the
+    |Q| query rows of ``src`` only."""
+    _, probe_cids = _ivf_udfs(cmat, nprobe)
+    return (
+        src.filter(F.col(id_col).isin(query_ids))
+        .select(F.col(id_col).alias("query_id"), F.col("vec").alias("qvec"), *extra)
+        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
     )
 
 
-def _read_pq_model(path: str) -> tuple[np.ndarray, np.ndarray | None]:
-    """(codebook, rotation-or-None) from a stored PQ/OPQ/IVFADC model
-    row — the reshape every reader/appender performed on its collect."""
-    mrow = _read_store_rows(f"{path}/model")[0]
-    m, codes, sub_dim = mrow["m"], mrow["codes"], mrow["sub_dim"]
-    cb = np.array(mrow["codebook"]).reshape(m, codes, sub_dim)
-    rot = (
-        np.array(mrow["rotation"]).reshape(m * sub_dim, m * sub_dim)
-        if mrow["rotation"] is not None
-        else None
+def _sq_decoded(st: _Store, data: DataFrame, id_col: str) -> DataFrame:
+    """(id, norm, deq[, cid]) — SQ byte codes through the affine decode,
+    model as 2·dim plan literals, all-JVM."""
+    deq = _sq_decode_expr(F.col("code"), *st.sq_lits())
+    cid = [] if st.cmat is None else ["cid"]
+    return data.select(id_col, "norm", deq.alias("deq"), *cid)
+
+
+def _sq_cell_pairs(
+    st: _Store, data: DataFrame, base: DataFrame, query_ids, nprobe: int, id_col: str
+) -> DataFrame:
+    """IVF×SQ candidates: every stored row of each query's probed cells
+    (the broadcast cid join's dynamic partition pruning reads only
+    those ``cid=N`` directories), with ``approx`` — the asymmetric
+    cosine of the exact query against the decoded bytes, true norms."""
+    qnorm = _vec_norm().alias("qnorm")
+    probes = _probes(base, st.cmat, query_ids, nprobe, id_col, qnorm)
+    approx = dot(F.col("qvec"), F.col("deq")) / (F.col("qnorm") * F.col("norm"))
+    return (
+        _sq_decoded(st, data, id_col)
+        .join(F.broadcast(probes), "cid")
+        .filter(F.col(id_col) != F.col("query_id"))
+        .withColumn("approx", approx)
     )
-    return cb, rot
+
+
+def _stored_topk(
+    spark,
+    path: str,
+    embeddings: DataFrame | None,
+    query_ids: list[int] | None,
+    k: int,
+    nprobe: int = 4,
+    rerank_factor: int = 20,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    where: Column | None = None,
+) -> DataFrame:
+    """Top-k from any persisted store: open it, then score with the
+    layout × codec's kernel — the same kernel the matching
+    self-contained form runs, so answers equal it at the same trained
+    models (pytest-pinned per composition). Float IVF looks query
+    vectors up in the inverted file; the compressed codecs hold no float
+    vectors, so query vectors and exact-refine candidates come from the
+    primary table ``embeddings``."""
+    if query_ids is None:
+        query_ids = list(range(10))
+    st = _open_store(path)
+    data = spark.read.parquet(st.data)
+    if st.pq is None and st.sq is None:
+        probes = _probes(data, st.cmat, query_ids, nprobe, id_col)
+        cand = data if where is None else data.filter(where)
+        return _ivf_score_probes(cand, probes, k, id_col)
+    base = embeddings.select(
+        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    )
+    if st.pq is not None:
+        _, adc_partials = _pq_udfs(*st.pq)
+        if st.cmat is None:
+            return _pq_score_refine_enc(
+                base, data, query_ids, k, rerank_factor, adc_partials, id_col
+            )
+        probes = _probes(base, st.cmat, query_ids, nprobe, id_col)
+        adc = _pq_adc_table(base, query_ids, adc_partials, id_col)
+        return _ivfpq_score_refine(
+            base, data, probes, adc, query_ids, k, rerank_factor, id_col
+        )
+    if st.cmat is None:
+        enc = _sq_decoded(st, data, id_col)
+        return _sq_score_refine(base, enc, query_ids, k, rerank_factor, id_col)
+    scored = _sq_cell_pairs(st, data, base, query_ids, nprobe, id_col).select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        F.round(F.col("approx"), 6).alias("approx_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
+    )
+    shortlist = (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k * rerank_factor)
+        .select("query_id", "neighbor_id")
+    )
+    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
+
+
+def _stored_range(
+    spark,
+    path: str,
+    embeddings: DataFrame | None,
+    query_ids: list[int],
+    radius: float,
+    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """RANGE search from a persisted IVF store: (query_id, neighbor_id,
+    cosine_sim) for every neighbor in the probed cells with ROUND(cos,
+    6) >= radius — no top-k window anywhere. Float IVF scores exactly
+    inside the probed cells. IVF×SQ is a provable filter-verify: the
+    byte decode prefilters at ``radius - C/norm - 1e-6``, where C =
+    sqrt(sum_d (scale_d/2)^2) bounds the dequantization error (per-dim
+    error <= scale_d/2 for unclipped codes, so the cosine error is <=
+    C/norm by Cauchy-Schwarz) and 1e-6 covers the exact side's rounding
+    band; survivors then fetch their TRUE vectors from ``embeddings``
+    for the exact rounded cosine and radius test. Either way misses
+    come ONLY from unprobed cells."""
+    st = _open_store(path)
+    data = spark.read.parquet(st.data)
+    if st.sq is None:
+        probes = _probes(data, st.cmat, query_ids, nprobe, id_col)
+        sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
+        return (
+            data.join(F.broadcast(probes), "cid")
+            .filter(F.col(id_col) != F.col("query_id"))
+            .select(
+                "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine_sim")
+            )
+            .filter(F.col("cosine_sim") >= radius)
+        )
+    base = embeddings.select(
+        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    )
+    c_bound = float(np.sqrt(((st.sq[1] / 2.0) ** 2).sum()))
+    cand = (
+        _sq_cell_pairs(st, data, base, query_ids, nprobe, id_col)
+        .filter(
+            F.col("approx") >= radius - F.lit(c_bound) / F.col("norm") - F.lit(1e-6)
+        )
+        .select("query_id", "qvec", F.col(id_col).alias("neighbor_id"))
+    )
+    verified = cand.join(
+        base.select(F.col(id_col).alias("neighbor_id"), F.col("vec")),
+        "neighbor_id",
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
+    )
+    return verified.filter(F.col("cosine_sim") >= radius)
 
 
 def _cap_train_set(
@@ -783,26 +1127,16 @@ def ivf_build_index(
     a probe of p cells reads exactly p partition directories —
     partition PRUNING, not a filter scan.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col),
-        to_double_array(F.col(vec_col)).alias("vec"),
-        *meta_cols,
+    _build_store(
+        embeddings,
+        path,
+        num_centroids,
+        max_iter=max_iter,
+        id_col=id_col,
+        vec_col=vec_col,
+        train_cap=train_cap,
+        meta_cols=meta_cols,
     )
-    train = _cap_train_set(base, F.col("vec"), train_cap).select(
-        array_to_vector(F.col("vec")).alias("features")
-    )
-    model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    # r13: the k-row centroid table is driver-sized — persist it
-    # driver-side instead of paying a Spark write job (guide §1.2).
-    _write_centroids(path, centers)
-    nearest_cid, _ = _ivf_udfs(np.array(centers), 1)
-    base.withColumn("cid", nearest_cid(F.col("vec"))).write.mode(
-        "overwrite"
-    ).partitionBy("cid").parquet(f"{path}/invfile")
 
 
 def ivf_query_stored(
@@ -839,33 +1173,12 @@ def ivf_query_stored(
     rowgroups of only the probed ``cid=N`` partitions are scored. The
     predicate can only SHRINK a cell's candidate set, so with
     nprobe = every cell the answer is exactly brute-force-over-slice
-    (pytest-pinned vs knn_bruteforce_filtered).
-
-    Entry runs compaction crash recovery; stored queries must not run
-    concurrently with a compaction (quiesced-store contract — see
-    recover_store_slices).
+    (pytest-pinned vs knn_bruteforce_filtered). Opens through
+    _open_store (crash recovery at entry).
     """
-    if query_ids is None:
-        query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    return _stored_topk(
+        spark, path, None, query_ids, k, nprobe, id_col=id_col, where=where
     )
-
-    # A crashed invfile compaction may have renamed the live inverted
-    # file away; recovery (one cheap listing) restores it before open.
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    inv = spark.read.parquet(f"{path}/invfile")
-    probes = (
-        inv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    cand = inv if where is None else inv.filter(where)
-    return _ivf_score_probes(cand, probes, k, id_col)
 
 
 def compact_ivf_index(
@@ -887,51 +1200,12 @@ def compact_ivf_index(
     per cell. FAISS's on-disk IndexIVF has no analogous fragmentation
     only because its add() rewrites a single memory-mapped file; the
     parquet inverted file trades that for cheap appends plus THIS
-    periodic fold. Run quiesced (between query jobs), like
-    compact_store_slices; the whole critical section holds
-    curation_extras.store_lock, so a stored reader or appender
-    ENTERING mid-fold waits at its recovery instead of racing the
-    staging dir; ``lock_timeout`` bounds that wait on a wedged holder,
-    the same tunable recover_store_slices exposes (ADVICE r11).
-
-    Crash safety reuses the store-compaction state machine
-    (curation_extras.recover_store_slices, same `_compact`/`_old_`
-    naming): the clustered rewrite lands in ``<path>/_compact``, the
-    live ``invfile`` is renamed to ``_old_invfile``, ``_compact``
-    promotes to ``invfile``, and only then is the old generation
-    deleted — entry recovery rolls a pre-promote crash back (the
-    ``_old_`` rename holds the only copy) and clears a post-promote
-    crash's dead rename. The stored-query readers run the same
-    recovery before opening the index.
+    periodic fold. Run quiesced (between query jobs). The swap is the
+    shared crash-safe one (_compact_store → _store_compaction); its
+    lock makes a reader or appender ENTERING mid-fold wait, and
+    ``lock_timeout`` bounds that wait on a wedged holder.
     """
-    import glob as _glob
-    import os
-    import shutil
-
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        _recover_store_slices_locked,
-        store_lock,
-    )
-
-    with store_lock(path, timeout=lock_timeout):
-        _recover_store_slices_locked(path)
-        inv = f"{path}/invfile"
-        tmp = f"{path}/_compact"
-
-        def _nfiles() -> int:
-            return len(_glob.glob(f"{inv}/cid=*/*.parquet"))
-
-        files_before = _nfiles()
-        # repartition BY cid: every cell's rows land in one task, so
-        # the partitionBy write emits exactly one file per non-empty
-        # cell.
-        spark.read.parquet(inv).repartition("cid").write.partitionBy(
-            "cid"
-        ).parquet(tmp)
-        os.replace(inv, f"{path}/_old_invfile")
-        os.replace(tmp, inv)
-        shutil.rmtree(f"{path}/_old_invfile", ignore_errors=True)
-        return files_before, _nfiles()
+    return _compact_store(spark, path, lock_timeout=lock_timeout)
 
 
 def incremental_semantic_dedup(
@@ -969,21 +1243,14 @@ def incremental_semantic_dedup(
 
     Composes with the rest of the index lifecycle: admit survivors
     with ``ivf_append_to_index`` (fixed centroids — add-after-train),
-    fold the accumulated append files with ``compact_ivf_index``, and
-    the entry recovery here heals a crashed compaction before reading.
+    fold the accumulated append files with ``compact_ivf_index``;
+    opening through _open_store heals a crashed compaction first.
     This is the production loop a 100 TB ingestion pipeline runs:
     nightly index build, per-ingest pruned dedup, append, periodic
     compaction.
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-    from parallel_map_reduce_spark.operators.dedup import (
-        connected_components,
-    )
-
-    recover_store_slices(index_path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(index_path), nprobe)
+    st = _open_store(index_path)
+    _, probe_cids = _ivf_udfs(st.cmat, nprobe)
     # eager=False (r13, guide §1.2): the connected_components
     # construction below consumes b and cross_dup in full (survivors →
     # intra → sym's eager checkpoint), so both lazily-marked checkpoints
@@ -997,7 +1264,7 @@ def incremental_semantic_dedup(
     probes = b.select(
         F.col(id_col).alias("id_n"), "qvec"
     ).withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    inv = spark.read.parquet(f"{index_path}/invfile")
+    inv = spark.read.parquet(st.data)
     cross_dup = (
         inv.join(F.broadcast(probes), "cid")
         .filter(F.round(cosine(F.col("qvec"), F.col("vec")), 6) >= threshold)
@@ -1006,9 +1273,22 @@ def incremental_semantic_dedup(
         .localCheckpoint(eager=False)
     )
 
-    # Within-batch components over the cross-surviving rows only (every
-    # edge incident to a cross_dup would be dropped anyway — same
-    # result as the lexical tier's filter-after, one kernel cheaper).
+    return _admission_statuses(b, cross_dup, threshold, num_blocks, id_col)
+
+
+def _admission_statuses(
+    b: DataFrame, cross_dup: DataFrame, threshold: float, num_blocks: int, id_col: str
+) -> DataFrame:
+    """(id, status, dup_of) for a batch ``b`` (id, qvec) given its
+    ``cross_dup`` (id_n, dup_of) matches against the store — the
+    status contract both semantic admissions share. Within-batch
+    components run over the cross-surviving rows only (every edge
+    incident to a cross_dup would be dropped anyway — same result as
+    the lexical tier's filter-after, one kernel cheaper)."""
+    from parallel_map_reduce_spark.operators.dedup import (
+        connected_components,
+    )
+
     survivors = b.join(
         cross_dup.withColumnRenamed("id_n", id_col), id_col, "left_anti"
     )
@@ -1020,7 +1300,6 @@ def incremental_semantic_dedup(
         vec_col="qvec",
     )
     comps = connected_components(intra.select("id_a", "id_b"))
-
     return (
         b.select(id_col)
         .join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
@@ -1090,17 +1369,8 @@ def incremental_semantic_dedup_with_audit(
     pass plus two cheap aggregates over the checkpointed match list.
     ``pruned_cross_ids`` stays answerable after the store is deleted
     (it derives from the checkpointed matches, not the invfile)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-    from parallel_map_reduce_spark.operators.dedup import (
-        connected_components,
-    )
-
-    recover_store_slices(index_path)
-    cmat = _read_centroid_matrix(index_path)
-    ncells = cmat.shape[0]
-    _, probe_all = _ivf_udfs(cmat, ncells)
+    st = _open_store(index_path)
+    _, probe_all = _ivf_udfs(st.cmat, st.cmat.shape[0])
     # eager=False (r13): same fusion as incremental_semantic_dedup — the
     # component construction below consumes b and matches in full, so
     # both checkpoints materialize inside its first job; statuses and
@@ -1114,7 +1384,7 @@ def incremental_semantic_dedup_with_audit(
         "qvec",
         F.posexplode(probe_all(F.col("qvec"))).alias("pos", "cid"),
     )
-    inv = spark.read.parquet(f"{index_path}/invfile")
+    inv = spark.read.parquet(st.data)
     matches = (
         inv.join(F.broadcast(probes), "cid")
         .filter(F.round(cosine(F.col("qvec"), F.col("vec")), 6) >= threshold)
@@ -1128,45 +1398,7 @@ def incremental_semantic_dedup_with_audit(
         .distinct()
     )
 
-    survivors = b.join(
-        cross_dup.withColumnRenamed("id_n", id_col), id_col, "left_anti"
-    )
-    intra = embedding_all_pairs_blocked(
-        survivors,
-        threshold=threshold,
-        num_blocks=num_blocks,
-        id_col=id_col,
-        vec_col="qvec",
-    )
-    comps = connected_components(intra.select("id_a", "id_b"))
-
-    statuses = (
-        b.select(id_col)
-        .join(cross_dup.withColumnRenamed("id_n", id_col), id_col, "left")
-        .join(
-            comps.select(
-                F.col("u").cast("long").alias(id_col),
-                F.col("label").alias("_comp"),
-            ),
-            id_col,
-            "left",
-        )
-        .select(
-            id_col,
-            F.when(F.col("dup_of").isNotNull(), F.lit("cross_dup"))
-            .when(
-                F.col("_comp").isNotNull() & (F.col("_comp") != F.col(id_col)),
-                F.lit("batch_dup"),
-            )
-            .otherwise(F.lit("kept"))
-            .alias("status"),
-            F.coalesce(
-                F.col("dup_of"),
-                F.when(F.col("_comp") != F.col(id_col), F.col("_comp")),
-                F.lit(-1).cast("long"),
-            ).alias("dup_of"),
-        )
-    )
+    statuses = _admission_statuses(b, cross_dup, threshold, num_blocks, id_col)
     return statuses, pruned_cross
 
 
@@ -1183,43 +1415,11 @@ def compact_pq_index(
     N-append deployment still pays N file opens per query until the
     fold). Returns (files_before, files_after); row content is exact —
     no model retrain, no re-encode — so stored answers are identical
-    before/after (pytest-pinned). Same crash-safe swap as
-    compact_ivf_index via the shared recover_store_slices state machine
-    (``_compact`` staging → ``_old_codes`` rename → promote → delete).
-    Run quiesced (never concurrently with a stored query or another
-    compaction); the PQ/IVFADC stored readers and appenders run the
-    same recovery at entry, so a crashed compaction heals at the next
-    open — matching the IVF readers' contract. The critical section
-    holds curation_extras.store_lock, so such an entry during the
-    fold waits instead of raising; ``lock_timeout`` bounds that wait,
-    matching recover_store_slices (ADVICE r11).
+    before/after (pytest-pinned). Works on any flat store (PQ, OPQ,
+    SQ8). Same shared swap and ``lock_timeout`` as compact_ivf_index;
+    run quiesced.
     """
-    import glob as _glob
-    import math
-    import os
-    import shutil
-
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        _recover_store_slices_locked,
-        store_lock,
-    )
-
-    with store_lock(path, timeout=lock_timeout):
-        _recover_store_slices_locked(path)
-        codes = f"{path}/codes"
-        tmp = f"{path}/_compact"
-
-        def _files() -> list[str]:
-            return _glob.glob(f"{codes}/*.parquet")
-
-        before = _files()
-        total = sum(os.path.getsize(f) for f in before)
-        nparts = max(1, math.ceil(total / target_bytes))
-        spark.read.parquet(codes).repartition(nparts).write.parquet(tmp)
-        os.replace(codes, f"{path}/_old_codes")
-        os.replace(tmp, codes)
-        shutil.rmtree(f"{path}/_old_codes", ignore_errors=True)
-        return len(before), len(_files())
+    return _compact_store(spark, path, target_bytes, lock_timeout)
 
 
 def ivf_range_query_stored(
@@ -1238,33 +1438,9 @@ def ivf_range_query_stored(
     ONLY the probed ``cid=N`` partitions, and the radius filter keeps
     every in-range neighbor found there — no top-k window anywhere.
     Output is identical to the self-contained ivf_range_search at the
-    same parameters on the same index (pytest-pinned). Entry runs
-    compaction crash recovery; stored queries must not run
-    concurrently with a compaction (quiesced-store contract)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)  # see ivf_query_stored
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    inv = spark.read.parquet(f"{path}/invfile")
-    probes = (
-        inv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    sim = F.round(cosine(F.col("qvec"), F.col("vec")), 6)
-    return (
-        inv.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine_sim")
-        )
-        .filter(F.col("cosine_sim") >= radius)
-    )
+    same parameters on the same index (pytest-pinned). Opens through
+    _open_store (crash recovery at entry)."""
+    return _stored_range(spark, path, None, query_ids, radius, nprobe, id_col)
 
 
 _ARGMAX_M = 1 << 31  # cand ids must sit in [0, 2^31) — cluster labels
@@ -1534,37 +1710,14 @@ def ivf_append_to_index(
     them to the inverted file — the nightly delta job between full
     rebuilds. ``meta_cols`` mirrors ivf_build_index's: a store built
     with persisted metadata must append the same columns or later
-    filtered queries would read NULLs for the appended rows. The quantizer is deliberately not retrained (FAISS's
-    add-after-train contract): cell boundaries stay fixed so earlier
-    vectors never need reassignment, at the cost of drift if the new
-    data's distribution shifts — rebuild cadence is the production
-    knob for that.
-
-    Scale shape: one centroid read (k rows), one narrow
-    assignment projection over the batch, one partitionBy(cid) append
-    — no existing index partition is read or rewritten.
-
-    Entry runs the compaction crash recovery (like the stored
-    readers): appending into a store whose live ``invfile`` a crashed
-    compact_ivf_index renamed to ``_old_invfile`` would otherwise
-    create a fresh invfile beside the only copy of the rows — an
-    unrecoverable both-exist state. Appends must not run concurrently
-    with a compaction (quiesced-store contract).
+    filtered queries would read NULLs for the appended rows. The
+    quantizer is deliberately not retrained (FAISS's add-after-train
+    contract, see _write_vectors): no existing index partition is read
+    or rewritten. Opens through _open_store (crash recovery at entry).
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    _write_vectors(
+        _open_store(path), embeddings, "append", id_col, vec_col, meta_cols
     )
-
-    recover_store_slices(path)
-    nearest_cid, _ = _ivf_udfs(_read_centroid_matrix(path), 1)
-    base = embeddings.select(
-        F.col(id_col),
-        to_double_array(F.col(vec_col)).alias("vec"),
-        *meta_cols,
-    )
-    base.withColumn("cid", nearest_cid(F.col("vec"))).write.mode(
-        "append"
-    ).partitionBy("cid").parquet(f"{path}/invfile")
 
 
 def ivfpq_append_to_index(
@@ -1586,34 +1739,12 @@ def ivfpq_append_to_index(
     sample is the rebuild-cadence tradeoff, as for the other two
     appenders.
 
-    Scale shape: one centroid read (k rows) + one model-row read
-    (driver-sized), one Arrow encode/assign pass over the batch, one
-    partitionBy(cid) parquet append. Each nightly append adds one data
-    file per touched cell — compact_ivf_index is the periodic fold
-    that restores one file per cell (answers pytest-pinned identical
-    across append and compaction).
-
-    Entry runs the compaction crash recovery (see ivf_append_to_index
-    — same both-exist hazard); appends must not run concurrently with
-    a compaction (quiesced-store contract).
+    Scale shape: one Arrow encode/assign pass over the batch, one
+    partitionBy(cid) parquet append; compact_ivf_index folds the
+    per-append files (answers pytest-pinned identical across append
+    and compaction).
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    nearest_cid, _ = _ivf_udfs(_read_centroid_matrix(path), 1)
-    cb, rot = _read_pq_model(path)
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        nearest_cid(F.col("vec")).alias("cid"),
-        encode(F.col("vec")).alias("code"),
-    ).write.mode("append").partitionBy("cid").parquet(f"{path}/invfile")
+    _write_vectors(_open_store(path), embeddings, "append", id_col, vec_col)
 
 
 def pq_train_codebooks(
@@ -2112,74 +2243,21 @@ def ivfpq_build_index(
     no analogue in Ge et al.'s minimization, so asking for one is a
     contract error, raised loudly instead of silently ignored).
     """
-    shared_codebook = _resolve_shared_codebook(shared_codebook, rotation)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    _build_store(
+        embeddings,
+        path,
+        num_centroids,
+        "pq",
+        m=m,
+        codes=codes,
+        shared_codebook=shared_codebook,
+        rotation=rotation,
+        n_iter=n_iter,
+        max_iter=max_iter,
+        id_col=id_col,
+        vec_col=vec_col,
+        train_cap=train_cap,
     )
-    # r13 (guide §1.2 + §2.6): one probe job replaces the two
-    # independent count() passes the coarse and PQ cap filters each
-    # paid, and the two quantizer fits — independent given the train
-    # sample — run CONCURRENTLY from driver threads so the second
-    # fit's jobs back-fill the executor tail of the first (the
-    # thread-pool overlap recipe; Spark's scheduler interleaves the
-    # two fits' jobs). Each fit sees exactly the frame it saw before
-    # (same derivation, same partitioning), so both trained models are
-    # bit-identical to the sequential form's.
-    probe = base.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size("vec")).alias("d")
-    ).first()
-
-    def _fit_coarse():
-        train = _cap_train_set(
-            base, F.col("vec"), train_cap, n=probe["n"]
-        ).select(array_to_vector(F.col("vec")).alias("features"))
-        model = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-        return [list(map(float, c)) for c in model.clusterCenters()]
-
-    def _fit_codes():
-        if rotation:
-            return opq_train(
-                embeddings,
-                m=m,
-                codes=codes,
-                n_iter=n_iter,
-                vec_col=vec_col,
-                train_cap=train_cap,
-                n=probe["n"],
-            )
-        return None, pq_train_codebooks(
-            embeddings,
-            m=m,
-            codes=codes,
-            shared=shared_codebook,
-            vec_col=vec_col,
-            train_cap=train_cap,
-            n=probe["n"],
-            dim=probe["d"],
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_coarse = pool.submit(_fit_coarse)
-        f_codes = pool.submit(_fit_codes)
-        centers = f_coarse.result()
-        rot, cb = f_codes.result()
-    # Driver-sized artifacts persist driver-side — no Spark write jobs.
-    _write_centroids(path, centers)
-    _write_pq_model(path, m, codes, cb, rot)
-
-    nearest_cid, _ = _ivf_udfs(np.array(centers), 1)
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        nearest_cid(F.col("vec")).alias("cid"),
-        encode(F.col("vec")).alias("code"),
-    ).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/invfile")
 
 
 def ivfpq_query_stored(
@@ -2202,39 +2280,9 @@ def ivfpq_query_stored(
     candidates come from the primary table — the index holds no float
     vectors. Output identical to the self-contained ivfpq_ann at the
     same parameters on the same trained quantizers (pytest-pinned).
-
-    Like every stored reader, entry runs crash recovery for an
-    interrupted compact_ivf_index (a pre-promote crash leaves the live
-    invfile renamed to ``_old_invfile``); stored queries must not run
-    concurrently with a compaction — the recover/compact state machine
-    assumes a quiesced store (see recover_store_slices)."""
-    if query_ids is None:
-        query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    # Honor a rotation if the persisted model carries one (the shared
-    # model schema reserves the column — scoring MUST match whatever
-    # the codes were encoded with, same branch as pq_query_stored).
-    cb, rot = _read_pq_model(path)
-    _, adc_partials = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    enc = spark.read.parquet(f"{path}/invfile")
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cids(F.col("vec"))).alias("cid"),
-        )
-    )
-    adc = _pq_adc_table(base, query_ids, adc_partials, id_col)
-    return _ivfpq_score_refine(
-        base, enc, probes, adc, query_ids, k, rerank_factor, id_col
+    Opens through _open_store (crash recovery at entry)."""
+    return _stored_topk(
+        spark, path, embeddings, query_ids, k, nprobe, rerank_factor, id_col, vec_col
     )
 
 
@@ -2427,36 +2475,20 @@ def pq_build_index(
     for ``rotation=True``; shared+rotation raises (see
     _resolve_shared_codebook).
     """
-    shared_codebook = _resolve_shared_codebook(shared_codebook, rotation)
-    if rotation:
-        rot, cb = opq_train(
-            embeddings,
-            m=m,
-            codes=codes,
-            n_iter=n_iter,
-            vec_col=vec_col,
-            train_cap=train_cap,
-        )
-    else:
-        rot = None
-        cb = pq_train_codebooks(
-            embeddings,
-            m=m,
-            codes=codes,
-            shared=shared_codebook,
-            vec_col=vec_col,
-            train_cap=train_cap,
-        )
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    _build_store(
+        embeddings,
+        path,
+        None,
+        "pq",
+        m=m,
+        codes=codes,
+        shared_codebook=shared_codebook,
+        rotation=rotation,
+        n_iter=n_iter,
+        id_col=id_col,
+        vec_col=vec_col,
+        train_cap=train_cap,
     )
-    # r13: the 1-row model is driver-sized — persist it driver-side
-    # instead of paying a Spark write job (guide §1.2).
-    _write_pq_model(path, m, codes, cb, rot)
-    base.select(
-        id_col, _vec_norm().alias("norm"), encode(F.col("vec")).alias("code")
-    ).write.mode("overwrite").parquet(f"{path}/codes")
 
 
 def pq_append_to_index(
@@ -2477,26 +2509,9 @@ def pq_append_to_index(
 
     Scale shape: one driver-sized model read, one Arrow encode pass
     over the batch, one parquet append — no existing code file is read
-    or rewritten.
-
-    Entry runs the compaction crash recovery (see ivf_append_to_index
-    — appending beside a crashed compact_pq_index's ``_old_codes``
-    rename would create an unrecoverable both-exist state); appends
-    must not run concurrently with a compaction.
+    or rewritten. Opens through _open_store (crash recovery at entry).
     """
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    cb, rot = _read_pq_model(path)
-    encode, _ = _pq_udfs(cb, rotation=rot)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col, _vec_norm().alias("norm"), encode(F.col("vec")).alias("code")
-    ).write.mode("append").parquet(f"{path}/codes")
+    _write_vectors(_open_store(path), embeddings, "append", id_col, vec_col)
 
 
 def pq_query_stored(
@@ -2519,28 +2534,17 @@ def pq_query_stored(
     itself holds no float vectors. Output is identical to
     pq_ann/opq_ann at the same parameters on the same trained model
     (pytest-pinned): persisting changes the I/O shape, not the answer.
-
-    Like every stored reader, entry runs crash recovery for an
-    interrupted compact_pq_index (a pre-promote crash leaves the live
-    code table renamed to ``_old_codes``); stored queries must not run
-    concurrently with a compaction — the recover/compact state machine
-    assumes a quiesced store (see recover_store_slices).
+    Opens through _open_store (crash recovery at entry).
     """
-    if query_ids is None:
-        query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    cb, rot = _read_pq_model(path)
-    _, adc_partials = _pq_udfs(cb, rotation=rot)
-    enc = spark.read.parquet(f"{path}/codes")
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    return _pq_score_refine_enc(
-        base, enc, query_ids, k, rerank_factor, adc_partials, id_col
+    return _stored_topk(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        k,
+        rerank_factor=rerank_factor,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -2719,67 +2723,14 @@ def sq_build_index(
       ``<path>/codes``  (vec_id, norm, code array<tinyint>) — ONE byte
                         per dimension plus one true norm per vector.
 
-    Same store layout as pq_build_index (model + flat codes), so
-    compact_pq_index and the recover_store_slices crash state machine
-    apply UNCHANGED. Unlike the PQ stores, both the encode here and the
+    Same flat layout as pq_build_index, with the SQ8 codec. Unlike the PQ stores, both the encode here and the
     stored read path are entirely JVM-side — no Python worker at build
     or query time (plan-asserted).
 
     Scale posture: training is one narrow posexplode agg (2 scalars per
     dimension); encode is a projection; the write is shuffle-free.
     """
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    vmin, vmax = sq_train(embeddings, vec_col=vec_col)
-    scale = (vmax - vmin) / 255.0
-    scale[scale == 0.0] = 1.0
-    # r13: the 1-row model is driver-sized — persist it driver-side
-    # instead of paying a Spark write job (guide §1.2).
-    _write_sq_model(path, vmin, scale)
-    # literal arrays built from the EXACT doubles the model row stores
-    # (not re-derived arithmetic — bit-stability is what pins
-    # sq_query_stored == sq_ann)
-    mins = F.array(*[F.lit(float(v)) for v in vmin])
-    scales = F.array(*[F.lit(float(s)) for s in scale])
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-    ).write.mode("overwrite").parquet(f"{path}/codes")
-
-
-def _write_sq_model(path: str, vmin: np.ndarray, scale: np.ndarray) -> None:
-    import pyarrow as pa
-
-    _write_store_rows(
-        f"{path}/model",
-        [
-            {
-                "dim": int(len(vmin)),
-                "vmin": [float(v) for v in vmin],
-                "scale": [float(s) for s in scale],
-            }
-        ],
-        pa.schema(
-            [
-                ("dim", pa.int32()),
-                ("vmin", pa.list_(pa.float64())),
-                ("scale", pa.list_(pa.float64())),
-            ]
-        ),
-    )
-
-
-def _sq_stored_model_arrays(spark, path: str):
-    """(mins, scales) literal-array columns rebuilt from the persisted
-    model row — scales are stored ALREADY guarded, so they ride back
-    into the plan verbatim. (``spark`` kept for signature stability;
-    the driver-sized row reads driver-side since r13.)"""
-    mrow = _read_store_rows(f"{path}/model")[0]
-    mins = F.array(*[F.lit(float(v)) for v in mrow["vmin"]])
-    scales = F.array(*[F.lit(float(s)) for s in mrow["scale"]])
-    return mins, scales
+    _build_store(embeddings, path, None, "sq", id_col=id_col, vec_col=vec_col)
 
 
 def sq_append_to_index(
@@ -2793,25 +2744,8 @@ def sq_append_to_index(
     code) rows — add-after-train; the quantizer is deliberately not
     retrained (dims that drift outside the trained range clip, exactly
     as FAISS's trained ScalarQuantizer does), so earlier codes never
-    re-encode. Entry runs compaction crash recovery (appending beside a
-    pre-promote ``_old_codes`` rename would create the unrecoverable
-    both-exist state); appends must not run concurrently with a
-    compaction (quiesced-store contract, see recover_store_slices)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    spark = embeddings.sparkSession
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-    ).write.mode("append").parquet(f"{path}/codes")
+    re-encode. Opens through _open_store (crash recovery at entry)."""
+    _write_vectors(_open_store(path), embeddings, "append", id_col, vec_col)
 
 
 def sq_query_stored(
@@ -2834,28 +2768,18 @@ def sq_query_stored(
     shortlist, and refine are all JVM zip_with/aggregate folds. Output
     is identical to sq_ann at the same parameters on the same trained
     model (pytest-pinned): the code round-trip is exact, so persisting
-    changes the I/O shape, not a single similarity.
-
-    Like every stored reader, entry runs crash recovery for an
-    interrupted compact_pq_index; stored queries must not run
-    concurrently with a compaction (quiesced-store contract)."""
-    if query_ids is None:
-        query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    changes the I/O shape, not a single similarity. Opens through
+    _open_store (crash recovery at entry)."""
+    return _stored_topk(
+        spark,
+        path,
+        embeddings,
+        query_ids,
+        k,
+        rerank_factor=rerank_factor,
+        id_col=id_col,
+        vec_col=vec_col,
     )
-
-    recover_store_slices(path)
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    enc = spark.read.parquet(f"{path}/codes").select(
-        id_col,
-        "norm",
-        _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
-    )
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    return _sq_score_refine(base, enc, query_ids, k, rerank_factor, id_col)
 
 
 def ivfsq_build_index(
@@ -2882,9 +2806,8 @@ def ivfsq_build_index(
                             of p cells reads exactly p partition
                             directories.
 
-    The ``invfile`` name is deliberate: compact_ivf_index and
-    ivf-style crash recovery apply UNCHANGED (third cid-partitioned
-    flavor after raw-vector IVF and IVFADC). Both quantizers train on
+    The IVF layout with the SQ8 codec (third cid-partitioned flavor
+    after raw-vector IVF and IVFADC). Both quantizers train on
     the same bounded deterministic sample discipline as every other
     trainer; neither retrains at append or query time.
 
@@ -2893,46 +2816,16 @@ def ivfsq_build_index(
     Arrow crossing for the cid, JVM zip_with for the bytes); the
     partitionBy(cid) write is the only data movement.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
+    _build_store(
+        embeddings,
+        path,
+        num_centroids,
+        "sq",
+        max_iter=max_iter,
+        id_col=id_col,
+        vec_col=vec_col,
+        train_cap=train_cap,
     )
-
-    # r13 (guide §2.6): the coarse k-means and the SQ (min, max) train
-    # are independent — run them concurrently from driver threads so
-    # the SQ agg's tasks back-fill the fit's executor tail. Each sees
-    # exactly the frame it saw sequentially, so both models are
-    # bit-identical; the KB-sized artifacts persist driver-side.
-    def _fit_coarse():
-        train = _cap_train_set(base, F.col("vec"), train_cap).select(
-            array_to_vector(F.col("vec")).alias("features")
-        )
-        kmodel = KMeans(k=num_centroids, seed=42, maxIter=max_iter).fit(train)
-        return [list(map(float, c)) for c in kmodel.clusterCenters()]
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_coarse = pool.submit(_fit_coarse)
-        f_sq = pool.submit(sq_train, embeddings, vec_col=vec_col)
-        centers = f_coarse.result()
-        vmin, vmax = f_sq.result()
-    scale = (vmax - vmin) / 255.0
-    scale[scale == 0.0] = 1.0
-    _write_centroids(path, centers)
-    _write_sq_model(path, vmin, scale)
-
-    mins = F.array(*[F.lit(float(v)) for v in vmin])
-    scales = F.array(*[F.lit(float(s)) for s in scale])
-    nearest_cid, _ = _ivf_udfs(np.array(centers), 1)
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-        nearest_cid(F.col("vec")).alias("cid"),
-    ).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/invfile")
 
 
 def ivfsq_append_to_index(
@@ -2945,26 +2838,9 @@ def ivfsq_append_to_index(
     to the EXISTING centroids and byte-encode it against the STORED SQ
     model, then append into the cid-partitioned inverted file —
     add-after-train on BOTH quantizers (cell boundaries stay fixed,
-    out-of-range dims clip; rebuild cadence is the drift knob). Entry
-    runs compaction crash recovery; appends must not run concurrently
-    with a compaction (quiesced-store contract)."""
-    spark = embeddings.sparkSession
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
-    )
-
-    recover_store_slices(path)
-    nearest_cid, _ = _ivf_udfs(_read_centroid_matrix(path), 1)
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    base.select(
-        id_col,
-        _vec_norm().alias("norm"),
-        _sq_encode_expr(F.col("vec"), mins, scales).alias("code"),
-        nearest_cid(F.col("vec")).alias("cid"),
-    ).write.mode("append").partitionBy("cid").parquet(f"{path}/invfile")
+    out-of-range dims clip; rebuild cadence is the drift knob). Opens
+    through _open_store (crash recovery at entry)."""
+    _write_vectors(_open_store(path), embeddings, "append", id_col, vec_col)
 
 
 def ivfsq_query_stored(
@@ -2993,59 +2869,11 @@ def ivfsq_query_stored(
     the flat SQ store's answers (pytest-pinned: the cells partition
     the corpus, and the SQ model is the same global min/max), so cell
     pruning is the ONLY approximation added on top of SQ8 — the same
-    recall ladder FAISS documents for IndexIVFScalarQuantizer.
-
-    Entry runs compaction crash recovery; stored queries must not run
-    concurrently with a compaction (quiesced-store contract)."""
-    if query_ids is None:
-        query_ids = list(range(10))
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    recall ladder FAISS documents for IndexIVFScalarQuantizer. Opens
+    through _open_store (crash recovery at entry)."""
+    return _stored_topk(
+        spark, path, embeddings, query_ids, k, nprobe, rerank_factor, id_col, vec_col
     )
-
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    mins, scales = _sq_stored_model_arrays(spark, path)
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-            _vec_norm().alias("qnorm"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    inv = spark.read.parquet(f"{path}/invfile").select(
-        id_col,
-        "norm",
-        _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
-        "cid",
-    )
-    scored = (
-        inv.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("qvec"), F.col("deq"))
-                / (F.col("qnorm") * F.col("norm")),
-                6,
-            ).alias("approx_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine_topk(base, shortlist, query_ids, k, id_col)
 
 
 def semantic_decontaminate(
@@ -3166,62 +2994,8 @@ def ivfsq_range_query_stored(
     Scale posture: only probed ``cid=N`` partitions of the byte table
     are read (DPP through the broadcast probe join); the prefilter
     runs entirely JVM-side on 1 byte/dim; the exact-verify join moves
-    only the prefiltered survivors. Entry runs compaction crash
-    recovery (quiesced-store contract)."""
-    from parallel_map_reduce_spark.operators.curation_extras import (
-        recover_store_slices,
+    only the prefiltered survivors. Opens through _open_store (crash
+    recovery at entry)."""
+    return _stored_range(
+        spark, path, embeddings, query_ids, radius, nprobe, id_col, vec_col
     )
-
-    recover_store_slices(path)
-    _, probe_cids = _ivf_udfs(_read_centroid_matrix(path), nprobe)
-    mrow = _read_store_rows(f"{path}/model")[0]
-    mins = F.array(*[F.lit(float(v)) for v in mrow["vmin"]])
-    scales = F.array(*[F.lit(float(s)) for s in mrow["scale"]])
-    c_bound = float(
-        np.sqrt(((np.array(mrow["scale"]) / 2.0) ** 2).sum())
-    )
-    base = embeddings.select(
-        F.col(id_col), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-            _vec_norm().alias("qnorm"),
-        )
-        .withColumn("cid", F.explode(probe_cids(F.col("qvec"))))
-    )
-    inv = spark.read.parquet(f"{path}/invfile").select(
-        id_col,
-        "norm",
-        _sq_decode_expr(F.col("code"), mins, scales).alias("deq"),
-        "cid",
-    )
-    approx = dot(F.col("qvec"), F.col("deq")) / (
-        F.col("qnorm") * F.col("norm")
-    )
-    cand = (
-        inv.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .filter(
-            approx
-            >= radius - F.lit(c_bound) / F.col("norm") - F.lit(1e-6)
-        )
-        .select(
-            "query_id",
-            "qvec",
-            F.col(id_col).alias("neighbor_id"),
-        )
-    )
-    verified = cand.join(
-        base.select(
-            F.col(id_col).alias("neighbor_id"), F.col("vec")
-        ),
-        "neighbor_id",
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine_sim"),
-    )
-    return verified.filter(F.col("cosine_sim") >= radius)

@@ -4,6 +4,8 @@ PLANS.md "Round-5 window plan"."""
 
 import hashlib
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from parallel_map_reduce_spark.functions.hashing import (
@@ -1805,3 +1807,126 @@ def test_compacted_chain_rejects_bad_compact_after(spark, sf_dir):
             ce.incremental_lsh_dedup_compacted(
                 spark, docs, n_batches=3, compact_after=bad
             )
+
+
+class _InjectedCrash(Exception):
+    pass
+
+
+# Swap steps a real compaction takes on each layout: one rename per
+# live dir, the promote, one delete per live dir.
+_SWAP_STEPS = {"slices": 7, "codes": 3, "invfile": 3}
+
+
+@pytest.mark.parametrize(
+    "layout,step,entry",
+    [("slices", s, "reader") for s in range(_SWAP_STEPS["slices"])]
+    + [
+        (layout, s, entry)
+        for layout in ("codes", "invfile")
+        for s in range(_SWAP_STEPS[layout])
+        for entry in ("reader", "appender")
+    ],
+)
+def test_shared_swap_crash_injected_mid_compaction(
+    spark, tmp_path, monkeypatch, layout, step, entry
+):
+    """Fault injection into a RUNNING compaction: the shared swap
+    (curation_extras._store_compaction) raises at its ``step``-th
+    os.replace/rmtree on the store, for the dedup slice store, a flat
+    ``codes/`` ANN store (SQ8) and a cid-partitioned ``invfile/`` ANN
+    store (IVF). The next reader or appender entry must recover, and
+    the store must answer exactly as before the compaction — then a
+    rerun compaction must succeed with the same answers."""
+    import os
+    import shutil
+
+    import numpy as np
+
+    from parallel_map_reduce_spark.operators import curation_extras as ce
+    from parallel_map_reduce_spark.operators import similarity
+
+    store = str(tmp_path / "store")
+    if layout == "slices":
+        for i, s in enumerate(["base", "batch_1", "batch_2"]):
+            spark.range(10 * i, 10 * i + 10).write.parquet(f"{store}/{s}")
+
+        def compact():
+            ce.compact_store_slices(spark, store)
+
+        def enter():
+            ce.recover_store_slices(store)
+
+        def answers():
+            subs = ce._store_slices(sorted(os.listdir(store)), None)
+            df = spark.read.parquet(*(f"{store}/{s}" for s in subs))
+            return sorted(r["id"] for r in df.collect())
+
+    else:
+        rng = np.random.default_rng(7)
+        vecs = spark.createDataFrame(
+            [(i, rng.normal(size=8).tolist()) for i in range(64)],
+            "vec_id long, embedding array<double>",
+        )
+        empty = vecs.limit(0)
+        even = vecs.filter(F.col("vec_id") % 2 == 0)
+        odd = vecs.filter(F.col("vec_id") % 2 == 1)
+        if layout == "codes":
+            similarity.sq_build_index(even, store)
+            similarity.sq_append_to_index(odd, store)
+
+            def compact():
+                similarity.compact_pq_index(spark, store)
+
+            def enter():
+                if entry == "appender":
+                    similarity.sq_append_to_index(empty, store)
+
+            def answers():
+                df = similarity.sq_query_stored(spark, store, vecs, k=5)
+                return sorted(map(tuple, df.collect()))
+
+        else:
+            similarity.ivf_build_index(even, store, num_centroids=4)
+            similarity.ivf_append_to_index(odd, store)
+
+            def compact():
+                similarity.compact_ivf_index(spark, store)
+
+            def enter():
+                if entry == "appender":
+                    similarity.ivf_append_to_index(empty, store)
+
+            def answers():
+                df = similarity.ivf_query_stored(spark, store, k=5, nprobe=2)
+                return sorted(map(tuple, df.collect()))
+
+    before = answers()
+    assert before
+    calls = []
+
+    def crashing(real):
+        def fake(target, *args, **kwargs):
+            if str(target).startswith(store):
+                calls.append(target)
+                if len(calls) == step + 1:
+                    raise _InjectedCrash(f"step {step}: {target}")
+            return real(target, *args, **kwargs)
+
+        return fake
+
+    monkeypatch.setattr(os, "replace", crashing(os.replace))
+    monkeypatch.setattr(shutil, "rmtree", crashing(shutil.rmtree))
+    with pytest.raises(_InjectedCrash):
+        compact()
+    monkeypatch.undo()
+    assert len(calls) == step + 1
+
+    enter()
+    assert answers() == before
+    names = os.listdir(store)
+    assert "_compact" not in names and not any(s.startswith("_old_") for s in names)
+    compact()
+    assert answers() == before
+    if layout == "slices":
+        assert sorted(s for s in os.listdir(store) if s != "_lock") == ["base"]

@@ -3,11 +3,13 @@ multimodal plumbing. The deterministic cores are oracle-checked by the
 driver; these tests cover the approximate/engine-side behavior."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from conftest import REFERENCE_FILES_DIR
 from parallel_map_reduce_spark.operators import dedup, multimodal, similarity
 from parallel_map_reduce_spark.sources.tables import load_table
 
@@ -619,6 +621,10 @@ def test_connected_components_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+@pytest.mark.skipif(
+    not os.path.exists(REFERENCE_FILES_DIR),
+    reason="reference corpus not present",
+)
 def test_binary_file_source_reads_payload_bytes(spark):
     """binaryFile ingestion: content bytes and lengths must match the
     on-disk files exactly, and a metadata-only projection must not fail

@@ -857,6 +857,7 @@ def test_kn_trigram_position_joins_aqe_skew_split(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4KB",
+        "spark.sql.shuffle.partitions": "32",
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():

@@ -1,5 +1,7 @@
 """Flagship wordcount tests — edge cases from FIXTURES.md §2."""
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -10,6 +12,10 @@ from parallel_map_reduce_spark.operators.wordcount import (
     wordcount_per_doc,
     wordcount_rdd,
 )
+
+from conftest import REFERENCE_FILES_DIR
+
+SERIAL_WC = os.path.join(os.path.dirname(REFERENCE_FILES_DIR), "serial_wc.txt")
 
 
 def _counts(spark, texts):
@@ -112,6 +118,9 @@ def test_permutation_invariance(spark):
     assert _counts(spark, texts) == _counts(spark, list(reversed(texts)))
 
 
+@pytest.mark.skipif(
+    not os.path.exists(SERIAL_WC), reason="reference corpus not present"
+)
 def test_custom_datasource_reads_reference_output(spark):
     """The wordcount_text Python data source must mount the reference's
     own serial output byte-exactly: 109,223 rows, 2,297,140 total count,
