@@ -992,17 +992,15 @@ def gopher_repetition_stats(
     char length, so the tie-break is part of the metric's determinism
     contract).
 
-    Scale shape: per n, one (id, gram) partial+final count agg over
-    non-distinct n-gram rows and one per-doc agg — all corpus-linear;
-    the per-doc joins are on the id key the doc aggs already clustered.
-    All fractions are integer/integer divisions, bit-identical across
-    engines before the single ROUND.
+    Scale shape: ONE doc-keyed shuffle. The tokenized frame is
+    hash-partitioned on id; every 2/3/5/8-gram and every line then
+    explodes as a (k, item) row (k = n, or 0 for a line) into one
+    (id, k, item) count, and one per-doc pass folds the counts into all
+    six signals with conditional aggregates. Both groupBys contain the
+    id key, so the id partitioning satisfies them and no further
+    exchange or join runs. All fractions are integer/integer
+    divisions, bit-identical across engines before the single ROUND.
     """
-    # base feeds SIX plan branches (four gram sizes + the line stats +
-    # the output spine); aliased reuse replans each from the scan, so
-    # materialize the tokenized frame once (the dedup.py
-    # stored-signatures discipline) — without this one execution
-    # re-scans and re-tokenizes the corpus per branch.
     from parallel_map_reduce_spark.functions.tokenize import tokens
 
     base = (
@@ -1020,88 +1018,73 @@ def gopher_repetition_stats(
             F.col("_ln"),
             F.length(F.concat_ws(" ", F.col("tk"))).alias("_dc"),
         )
-        .localCheckpoint(eager=True)
+        .repartition(id_col)
     )
 
-    def grams_df(n: int) -> DataFrame:
+    def items(n: int) -> Column:
         size = F.size("tk")
-        idx = F.sequence(F.lit(1), size - (n - 1))
         grams = F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("tk"), i + j) for j in range(n)]
+            F.sequence(F.lit(1), size - (n - 1)),
+            lambda i: F.struct(
+                F.lit(n).alias("k"),
+                F.concat_ws(
+                    " ", *[F.element_at(F.col("tk"), i + j) for j in range(n)]
+                ).alias("item"),
             ),
         )
-        arr = F.when(size >= n, grams).otherwise(F.array())
-        return base.select(
-            F.col(id_col), F.col("_dc"), F.explode(arr).alias("gram")
-        ).groupBy(id_col, "_dc", "gram").agg(F.count(F.lit(1)).alias("cnt"))
-
-    def top_frac(n: int, out: str) -> DataFrame:
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("cnt").desc(), F.col("gram").asc()
-        )
-        return (
-            grams_df(n)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col(id_col),
-                (F.col("cnt") * F.length("gram") / F.col("_dc")).alias(out),
-            )
+        return F.when(size >= n, grams).otherwise(
+            F.array().cast("array<struct<k:int,item:string>>")
         )
 
-    def dup_frac(n: int, out: str) -> DataFrame:
-        return (
-            grams_df(n)
-            .groupBy(id_col)
-            .agg(
-                (
-                    F.sum(
-                        F.when(
-                            F.col("cnt") >= 2, F.col("cnt") * F.length("gram")
-                        ).otherwise(0)
-                    )
-                    / F.first("_dc")
-                ).alias(out)
-            )
+    lines = F.transform(
+        F.col("_ln"), lambda ln: F.struct(F.lit(0).alias("k"), ln.alias("item"))
+    )
+    # The explode is over an expression, not an attribute, so
+    # InferFiltersFromGenerate adds no size filter that could re-derive
+    # the token arrays below the exchange.
+    counts = (
+        base.select(
+            F.col(id_col),
+            F.col("_dc"),
+            F.explode(
+                F.concat(items(2), items(3), items(5), items(8), lines)
+            ).alias("_it"),
         )
-
-    # Within-doc duplicate-line rows: explode the materialized line
-    # array (safe — base is checkpointed, so InferFiltersFromGenerate
-    # has nothing to re-derive), count per (doc, line), fold to the two
-    # fractions. The char denominator counts every occurrence's raw
-    # length; tokenized docs always have ≥1 non-empty char but the
-    # zero-guard keeps the expression total.
-    lg = (
-        base.select(F.col(id_col), F.explode("_ln").alias("line"))
-        .groupBy(id_col, "line")
+        .groupBy(
+            id_col,
+            "_dc",
+            F.col("_it.k").alias("k"),
+            F.col("_it.item").alias("item"),
+        )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    dup_chars = F.sum(
-        F.when(F.col("cnt") >= 2, F.col("cnt") * F.length("line")).otherwise(0)
-    )
-    all_chars = F.sum(F.col("cnt") * F.length("line"))
-    dl = lg.groupBy(id_col).agg(
-        (
-            F.sum(F.when(F.col("cnt") >= 2, F.col("cnt")).otherwise(0))
-            / F.sum("cnt")
-        ).alias("_dlf"),
-        F.when(all_chars > 0, dup_chars / all_chars)
+
+    k, cnt = F.col("k"), F.col("cnt")
+    chars = cnt * F.length("item")
+    dup = cnt >= 2
+
+    def top(n: int) -> Column:
+        # most frequent n-gram, ties to the smallest gram
+        t = F.min(
+            F.when(k == n, F.struct((-cnt).alias("c"), F.col("item").alias("g")))
+        )
+        return -t["c"] * F.length(t["g"]) / F.col("_dc")
+
+    def dup_sum(n: int, value: Column) -> Column:
+        return F.sum(F.when((k == n) & dup, value).otherwise(0))
+
+    line_chars = F.sum(F.when(k == 0, chars))
+    fracs = counts.groupBy(id_col, "_dc").agg(
+        top(2).alias("_t2"),
+        top(3).alias("_t3"),
+        (dup_sum(5, chars) / F.col("_dc")).alias("_d5"),
+        (dup_sum(8, chars) / F.col("_dc")).alias("_d8"),
+        (dup_sum(0, cnt) / F.sum(F.when(k == 0, cnt))).alias("_dlf"),
+        F.when(line_chars > 0, dup_sum(0, chars) / line_chars)
         .otherwise(F.lit(0.0))
         .alias("_dlcf"),
     )
-
-    out = base.select(F.col(id_col))
-    for frame in (
-        top_frac(2, "_t2"),
-        top_frac(3, "_t3"),
-        dup_frac(5, "_d5"),
-        dup_frac(8, "_d8"),
-        dl,
-    ):
-        out = out.join(frame, id_col, "left")
-    return out.select(
+    return fracs.select(
         id_col,
         *[
             F.round(F.coalesce(F.col(c), F.lit(0.0)), 6).alias(a)

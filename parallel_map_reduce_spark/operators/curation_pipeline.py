@@ -22,9 +22,15 @@ Design rules (each documented on the stage):
   because signals are per-document (or corpus-model-based) and
   independent of which other docs earlier gates dropped. Gates then
   apply sequentially, so funnel counts are order-meaningful.
-* Set-dependent stages (near-dup dedup, Madow sampling) run on their
-  actual input set — a survivor is min-id within its component AMONG
-  SURVIVORS, and the PPS cumsum runs over the sampled population.
+* Pair scores are corpus-wide signals too: whether a near-dup edge
+  exists (LSH band match plus exact-Jaccard verify; same-cluster
+  cosine >= threshold) depends only on its two documents, so the
+  edges among any survivor set S are the corpus-wide edges with both
+  ends in S. Both edge sets are scored once in the concurrent phase.
+* Set-dependent stages (near-dup components, Madow sampling) run on
+  their actual input set — a survivor is min-id within its component
+  AMONG SURVIVORS (components of the edge set restricted to the
+  stage's input), and the PPS cumsum runs over the sampled population.
 * Every gate compares the SAME rounded value in both engines (the
   stage operators' parity-tested rounded outputs), so no float
   boundary can flip a keep decision cross-engine.
@@ -93,25 +99,6 @@ SEMDEDUP_BLOCK_ABOVE = 40
 SEMDEDUP_NUM_BLOCKS = 4
 
 
-def _stage_row(
-    stage: str, prev: DataFrame, keep: DataFrame, id_col: str
-) -> DataFrame:
-    """One funnel-audit row: (stage, n_in, n_out, id_checksum). All
-    three aggregates are scalar reductions over id-only frames."""
-    return (
-        prev.agg(F.count(F.lit(1)).alias("n_in"))
-        .crossJoin(
-            keep.agg(
-                F.count(F.lit(1)).alias("n_out"),
-                F.coalesce(F.sum(id_col), F.lit(0))
-                .cast("long")
-                .alias("id_checksum"),
-            )
-        )
-        .select(F.lit(stage).alias("stage"), "n_in", "n_out", "id_checksum")
-    )
-
-
 def pipeline_curate_corpus(
     spark: SparkSession,
     docs: DataFrame,
@@ -127,35 +114,38 @@ def pipeline_curate_corpus(
 
     Scale shape: each signal stage is the registered operator's plan
     (single-pass projections / one model agg + broadcast join); the
-    seven corpus-wide signal frames materialize CONCURRENTLY from a
-    driver thread pool (r13, guide §2.6 — they are mutually
-    independent by the corpus-wide-signal design rule, so only the
-    wall-clock interleaving changes, never a value); keep
-    sets are id-only frames that broadcast into the next stage's join;
-    the only data-sized shuffles are the stage operators' own
-    (shingle banding among stage-3 survivors, the per-shard packing
-    window). Nothing here adds a shuffle the standalone operators
-    don't already pay.
+    eight corpus-wide signal frames — the two near-dup edge sets
+    among them — materialize CONCURRENTLY from a driver thread pool
+    (guide §2.6 — they are mutually independent by the
+    corpus-wide-signal design rule, so only the wall-clock
+    interleaving changes, never a value); keep sets are id-only frames
+    that broadcast into the next stage's join, so the sequential gate
+    chain is id-set algebra plus connected components. The only
+    data-sized shuffles are the stage operators' own (shingle banding,
+    the per-shard packing window). Nothing here adds a shuffle the
+    standalone operators don't already pay.
     """
     docs = docs.localCheckpoint(eager=True)  # 9 stage consumers
     # Two plan branches consume embeddings (the corpus-wide centroid
-    # assignment and the emb_surv survivor join) — checkpoint once at
+    # assignment and the cosine pair scoring) — checkpoint once at
     # entry like docs, per the module's multi-consumer rule
     # (ADVICE r12: recompute cost only, not correctness).
     embeddings = embeddings.localCheckpoint(eager=True)
     all_ids = docs.select(id_col)
 
     # ---- Corpus-wide signal phase, CONCURRENT (r13; guide §2.6) ----
-    # Stages 1-4 plus the stage-6 centroid assignment, the stage-7
-    # decontamination flag and the stage-8 DSIR model all compute their
-    # signals CORPUS-WIDE by design (per-doc predicates / corpus-model
-    # artifacts, independent of which docs the other gates drop) — so
-    # the seven signal frames are mutually independent and materialize
-    # concurrently from a driver thread pool; the GATES below stay
-    # strictly sequential on the checkpointed id sets. Every keep set
-    # (and funnel row) is identical to the sequential form because a
-    # per-doc gate commutes with the survivor join:
-    # rep-pred ∩ k1 = (rep-pred over all docs) ∩ k1.
+    # Stages 1-4, the stage-5 LSH edges, the stage-6 cosine edges, the
+    # stage-7 decontamination flag and the stage-8 DSIR model all
+    # compute their signals CORPUS-WIDE by design (per-doc predicates,
+    # per-pair scores, corpus-model artifacts — independent of which
+    # docs the other gates drop) — so the eight signal frames are
+    # mutually independent and materialize concurrently from a driver
+    # thread pool; the GATES below stay strictly sequential on the
+    # checkpointed id sets. Every keep set (and funnel row) is
+    # identical to the sequential form because a per-doc gate commutes
+    # with the survivor join — rep-pred ∩ k1 = (rep-pred over all docs)
+    # ∩ k1 — and a per-pair edge test commutes with restricting both
+    # endpoints: edges(S) = edges(corpus) ∩ S×S.
 
     def _sig_quality():
         # Stage-1 signal — Gopher A1.1 quality gate, on the operator's
@@ -254,12 +244,34 @@ def pipeline_curate_corpus(
             .localCheckpoint(eager=True)
         )
 
-    def _sig_centroids():
+    def _sig_sem_edges():
         # Stage-6 signal — corpus-wide kmeans ASSIGNMENT (clusters must
-        # not depend on upstream gate order).
-        return (
+        # not depend on upstream gate order), then every same-cluster
+        # cosine edge; the hot-cluster block split is value-neutral, so
+        # each edge depends only on its two vectors.
+        assigned = (
             _similarity.nearest_centroid_assign(embeddings)
             .select(F.col(vec_id_col), "cluster")
+            .localCheckpoint(eager=True)
+        )
+        return (
+            ce.cluster_sharded_pairs(
+                embeddings,
+                assigned,
+                EMBED_DUP_THRESHOLD,
+                block_above=SEMDEDUP_BLOCK_ABOVE,
+                num_blocks=SEMDEDUP_NUM_BLOCKS,
+            )
+            .select("id_a", "id_b")
+            .localCheckpoint(eager=True)
+        )
+
+    def _sig_lsh_edges():
+        # Stage-5 signal — every verified MinHash-LSH near-dup edge
+        # (band-match candidacy and the Jaccard verify are per-pair).
+        return (
+            _dedup.minhash_lsh_dedup_pairs(docs, text_col=text_col, id_col=id_col)
+            .select("id_a", "id_b")
             .localCheckpoint(eager=True)
         )
 
@@ -270,7 +282,8 @@ def pipeline_curate_corpus(
         s_qc,
         dec_keep,
         dsir_sig,
-        assigned_all,
+        sem_edges_all,
+        lsh_edges_all,
     ) = ce._overlap(
         _sig_quality,
         _sig_repetition,
@@ -278,8 +291,26 @@ def pipeline_curate_corpus(
         _sig_classifier,
         _sig_decontaminate,
         _sig_dsir,
-        _sig_centroids,
+        _sig_sem_edges,
+        _sig_lsh_edges,
     )
+
+    def _losers(edges: DataFrame, keep: DataFrame) -> DataFrame:
+        # Non-canonical members of the components AMONG ``keep``: the
+        # edge set is cut to both-ends-in-keep by two broadcast
+        # semi-joins (one per endpoint), then the unchanged min-label
+        # fixpoint runs on what is left.
+        ids = keep.select(id_col)
+        among = edges.join(
+            F.broadcast(ids.withColumnRenamed(id_col, "id_a")), "id_a", "left_semi"
+        ).join(
+            F.broadcast(ids.withColumnRenamed(id_col, "id_b")), "id_b", "left_semi"
+        )
+        return (
+            _dedup.connected_components(among)
+            .filter(F.col("u") != F.col("label"))
+            .select(F.col("u").cast("long").alias(id_col))
+        )
 
     # ---- Sequential gate phase: cheap id-set intersections over the
     # checkpointed signal frames (order-meaningful funnel counts). ----
@@ -289,8 +320,8 @@ def pipeline_curate_corpus(
     # set is consumed in full by the next stage's construction (join /
     # broadcast build / component fixpoint), which materializes the
     # lazily-marked blocks inside the job it was already running —
-    # one fewer dedicated job per gate, identical sets. The stage-row
-    # audit aggregates read the cached blocks in the final action.
+    # one fewer dedicated job per gate, identical sets. The audit
+    # aggregate reads the cached blocks in the final action.
     k2 = s_rep.join(k1, id_col).select(id_col).localCheckpoint(eager=False)
 
     # Stage 3 — CCNet band applied to stage-2 survivors.
@@ -302,52 +333,28 @@ def pipeline_curate_corpus(
 
     # Stage 5 — MinHash-LSH near-dup dedup AMONG stage-4 survivors
     # (set-dependent: the canonical keeper is min-id per component of
-    # the surviving subgraph).
-    s4docs = docs.join(F.broadcast(kq), id_col)
-    edges = _dedup.minhash_lsh_dedup_pairs(
-        s4docs, text_col=text_col, id_col=id_col
-    ).select("id_a", "id_b")
-    losers = (
-        _dedup.connected_components(edges)
-        .filter(F.col("u") != F.col("label"))
-        .select(F.col("u").cast("long").alias(id_col))
-    )
-    k4 = kq.join(F.broadcast(losers), id_col, "left_anti").localCheckpoint(
-        eager=False
-    )
+    # the surviving subgraph; the edges themselves are the corpus-wide
+    # signal).
+    k4 = kq.join(
+        F.broadcast(_losers(lsh_edges_all, kq)), id_col, "left_anti"
+    ).localCheckpoint(eager=False)
 
     # Stage 6 — cluster-sharded SemDeDup AMONG stage-5 survivors
     # (Abbas et al. 2023; real pipelines dedup lexically AND
     # semantically — MinHash catches shared n-grams, the embedding
     # tier catches paraphrases with disjoint surface forms). The
-    # kmeans ASSIGNMENT is corpus-wide like every other corpus-model
-    # artifact (clusters must not depend on upstream gate order); the
-    # cosine kernel runs only within clusters and only among
-    # survivors, with the hot-cluster block-pair decomposition
-    # bounding any one task's Gram tile (the registered
-    # semantic_dedup_cluster_sharded machinery, same knobs). Docs
-    # WITHOUT an embedding row cannot lose (anti-join against losers,
-    # who by construction have embeddings) — at sf0.1 embeddings
-    # cover 2000 of 5000 doc ids, and a 100 TB corpus likewise embeds
-    # a rolling subset.
-    surv_ids = k4.select(F.col(id_col).alias(vec_id_col))
-    emb_surv = embeddings.join(F.broadcast(surv_ids), vec_id_col)
-    assigned_surv = assigned_all.join(F.broadcast(surv_ids), vec_id_col)
-    sem_edges = ce.cluster_sharded_pairs(
-        emb_surv,
-        assigned_surv,
-        EMBED_DUP_THRESHOLD,
-        block_above=SEMDEDUP_BLOCK_ABOVE,
-        num_blocks=SEMDEDUP_NUM_BLOCKS,
-    ).select("id_a", "id_b")
-    sem_losers = (
-        _dedup.connected_components(sem_edges)
-        .filter(F.col("u") != F.col("label"))
-        .select(F.col("u").cast("long").alias(id_col))
-    )
-    ksem = k4.join(F.broadcast(sem_losers), id_col, "left_anti").localCheckpoint(
-        eager=False
-    )
+    # kmeans ASSIGNMENT and the within-cluster cosine edges are
+    # corpus-wide signals (the registered semantic_dedup_cluster_sharded
+    # machinery, same knobs, hot-cluster block-pair decomposition
+    # bounding any one task's Gram tile); the COMPONENTS are
+    # set-dependent, computed on the edges with both ends among stage-5
+    # survivors. Docs WITHOUT an embedding row cannot lose (anti-join
+    # against losers, who by construction have embeddings) — at sf0.1
+    # embeddings cover 2000 of 5000 doc ids, and a 100 TB corpus
+    # likewise embeds a rolling subset.
+    ksem = k4.join(
+        F.broadcast(_losers(sem_edges_all, k4)), id_col, "left_anti"
+    ).localCheckpoint(eager=False)
 
     # Stage 7 — benchmark decontamination: eval docs themselves
     # (id % 50 == 0) leave the corpus, and any training doc with >=20%
@@ -407,21 +414,53 @@ def pipeline_curate_corpus(
         .select(F.lit("09_pack").alias("stage"), "n_in", "n_out", "id_checksum")
     )
 
-    rows = [
-        _stage_row("01_gopher_quality", all_ids, k1, id_col),
-        _stage_row("02_gopher_repetition", k1, k2, id_col),
-        _stage_row("03_ccnet_perplexity", k2, k3, id_col),
-        _stage_row("04_quality_classifier", k3, kq, id_col),
-        _stage_row("05_lsh_neardup", kq, k4, id_col),
-        _stage_row("06_semantic_dedup", k4, ksem, id_col),
-        _stage_row("07_decontaminate", ksem, k5, id_col),
-        _stage_row("08_dsir_madow_sample", k5, k6, id_col),
-        row_pack,
+    # Funnel audit: ONE aggregate over the stage-tagged union of the
+    # nine id sets (count and id-sum per tag as conditional
+    # aggregates), its one row exploded into the eight stage rows —
+    # stage i reads n_in from set i-1 and n_out / id_checksum from set
+    # i.
+    stages = [
+        "01_gopher_quality",
+        "02_gopher_repetition",
+        "03_ccnet_perplexity",
+        "04_quality_classifier",
+        "05_lsh_neardup",
+        "06_semantic_dedup",
+        "07_decontaminate",
+        "08_dsir_madow_sample",
     ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    sets = [all_ids, k1, k2, k3, kq, k4, ksem, k5, k6]
+    tagged = sets[0].select(F.lit(0).alias("_t"), F.col(id_col).alias("_id"))
+    for t, ids in enumerate(sets[1:], 1):
+        tagged = tagged.unionByName(
+            ids.select(F.lit(t).alias("_t"), F.col(id_col).alias("_id"))
+        )
+    in_t = [F.col("_t") == t for t in range(len(sets))]
+    totals = tagged.agg(
+        *[F.count(F.when(c, 1)).alias(f"n{t}") for t, c in enumerate(in_t)],
+        *[
+            F.coalesce(F.sum(F.when(c, F.col("_id"))), F.lit(0))
+            .cast("long")
+            .alias(f"s{t}")
+            for t, c in enumerate(in_t)
+        ],
+    )
+    audit = totals.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(name).alias("stage"),
+                        F.col(f"n{t}").alias("n_in"),
+                        F.col(f"n{t + 1}").alias("n_out"),
+                        F.col(f"s{t + 1}").alias("id_checksum"),
+                    )
+                    for t, name in enumerate(stages)
+                ]
+            )
+        ).alias("_r")
+    ).select("_r.*")
+    return audit.unionByName(row_pack)
 
 
 def pipeline_curate_corpus_oracle_sql(sample_n: int = SAMPLE_N) -> str:

@@ -7,7 +7,7 @@ each runs inside whole-stage codegen and is DuckDB-oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from parallel_map_reduce_spark.functions.hashing import fingerprint_md5, hash64
@@ -687,12 +687,15 @@ def train_quality_classifier(
     round's update as exact e9 integers.
 
     Scale posture: the feature frame is computed once (zero-shuffle
-    projection of the corpus scan) and localCheckpointed; each round
-    is ONE map-side-combined 6-scalar aggregate over it — no shuffle
-    of data rows, nothing but scalars to the driver; cost is
-    rounds x one corpus pass, the same shape DistBelief-era batch
-    trainers ran. The 1e9 quantization bounds |sum| by n_docs x 1e9 —
-    raise the scale's headroom (or drop to 1e6 grain) past ~10^9 docs.
+    projection of the corpus scan) and localCheckpointed inside round
+    1; each round is ONE job — the 6 integer sums ride as observed
+    metrics of a no-op write over it (an ``agg().collect()`` would pay
+    a map-stage job plus a result job under AQE), and round 1 also
+    observes the row count n. No shuffle of data rows, nothing but
+    scalars to the driver; cost is rounds x one corpus pass, the same
+    shape DistBelief-era batch trainers ran. The 1e9 quantization
+    bounds |sum| by n_docs x 1e9 — raise the scale's headroom (or drop
+    to 1e6 grain) past ~10^9 docs.
 
     With ``return_scores=True`` the return value is instead the
     INFERENCE pass — every document scored by the final trained
@@ -706,13 +709,8 @@ def train_quality_classifier(
     readStream source).
     """
     spark = docs.sparkSession
-    feat = _qc_features(docs, text_col, id_col).localCheckpoint(eager=True)
-    n = float(feat.count())
-    if n == 0:
-        raise ValueError(
-            "train_quality_classifier: empty corpus (the gradient mean "
-            "divides by n)"
-        )
+    feat = _qc_features(docs, text_col, id_col).localCheckpoint(eager=False)
+    n = 0.0
     w = [0.0, 0.0, 0.0, 0.0]
     xs = [F.lit(1.0), F.col("x1"), F.col("x2"), F.col("x3")]
     rows: list[tuple] = []
@@ -733,7 +731,13 @@ def train_quality_classifier(
             ).alias(f"q{j}")
             for j, xj in enumerate(xs)
         ]
-        stat = d.agg(
+        if rnd == 1:
+            aggs.append(F.count(F.lit(1)).alias("n"))
+        # Observed metrics are reported from the result stage, so each
+        # partition's update counts once and the sums stay exact longs.
+        obs = Observation()
+        d.observe(
+            obs,
             *aggs,
             F.sum(F.when(F.col("p") >= 0.5, 1).otherwise(0))
             .cast("long")
@@ -745,7 +749,15 @@ def train_quality_classifier(
             )
             .cast("long")
             .alias("n_correct"),
-        ).collect()[0]
+        ).write.format("noop").mode("overwrite").save()
+        stat = obs.get
+        if rnd == 1:
+            n = float(stat["n"])
+            if n == 0:
+                raise ValueError(
+                    "train_quality_classifier: empty corpus (the gradient "
+                    "mean divides by n)"
+                )
         # float(q)/scale — NOT q/scale: the oracle casts the exact
         # integer to DOUBLE first and divides second (two roundings);
         # Python's int/float true division rounds once, which can

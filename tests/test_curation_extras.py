@@ -434,6 +434,70 @@ def test_cluster_sharded_pairs_match_in_cluster_subset(spark, sf_dir):
     assert sp == expected  # keys AND rounded cosines bit-match
 
 
+def test_dedup_edges_among_subset_equal_corpus_edges_restricted(spark, sf_dir):
+    """The curation funnel scores both near-dup edge sets corpus-wide
+    and restricts them to each stage's survivors; that is exact only
+    because every edge depends on its two endpoints alone. For a random
+    id subset S, the pairs scored among S equal the corpus-wide pairs
+    with both ends in S — for MinHash-LSH (band candidacy plus Jaccard
+    verify) and for cluster-sharded cosine with a hot cluster that is
+    tiled corpus-wide but falls below ``block_above`` within S."""
+    import random
+
+    from parallel_map_reduce_spark.operators import similarity
+    from parallel_map_reduce_spark.operators.curation_extras import (
+        cluster_sharded_pairs,
+    )
+    from parallel_map_reduce_spark.operators.dedup import (
+        minhash_lsh_dedup_pairs,
+    )
+    from parallel_map_reduce_spark.operators.queries_llm import (
+        EMBED_DUP_THRESHOLD,
+    )
+
+    def keyed(df, value):
+        return {(r["id_a"], r["id_b"]): r[value] for r in df.collect()}
+
+    def among(pairs, ids):
+        return {p: v for p, v in pairs.items() if p[0] in ids and p[1] in ids}
+
+    rng = random.Random(20231017)
+    docs = load_table(spark, sf_dir, "documents")
+    doc_ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+    s_docs = set(rng.sample(doc_ids, len(doc_ids) // 2))
+    sub_docs = docs.filter(F.col("doc_id").isin(sorted(s_docs)))
+    full = keyed(minhash_lsh_dedup_pairs(docs), "jaccard")
+    part = keyed(minhash_lsh_dedup_pairs(sub_docs), "jaccard")
+    assert part == among(full, s_docs)
+    assert part and len(part) < len(full)
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    assigned = similarity.nearest_centroid_assign(emb).select(
+        "vec_id", "cluster"
+    )
+    cluster_of = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
+    vec_ids = sorted(cluster_of)
+    s_vecs = set(rng.sample(vec_ids, len(vec_ids) // 2))
+    clusters = list(cluster_of.values())
+    top = max(set(clusters), key=clusters.count)
+    hot = clusters.count(top)
+    assert sum(cluster_of[v] == top for v in s_vecs) < hot
+
+    def sharded(e, a):
+        return keyed(
+            cluster_sharded_pairs(
+                e, a, EMBED_DUP_THRESHOLD, block_above=hot, num_blocks=4
+            ),
+            "cosine_sim",
+        )
+
+    keep = F.col("vec_id").isin(sorted(s_vecs))
+    full = sharded(emb, assigned)
+    part = sharded(emb.filter(keep), assigned.filter(keep))
+    assert part == among(full, s_vecs)  # keys AND rounded cosines
+    assert part and len(part) < len(full)
+
+
 # ---------------------------------------------------------------------------
 # multi-round BPE trainer
 # ---------------------------------------------------------------------------

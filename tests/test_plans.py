@@ -665,6 +665,35 @@ def test_curate_funnel_stage_shapes(spark):
     assert "SortMergeJoin" not in plan
 
 
+# Spark jobs one funnel run launches at sf0.01 (109 measured, the same
+# at 4 and 8 cores): the eight signal frames, the two dedup edge sets
+# among them, in the concurrent phase; then id-set gates, two component
+# fixpoints and one audit aggregate. The margin absorbs a job or two
+# of scheduling variation, not a stage put back on the gate chain.
+FUNNEL_JOB_BUDGET = 115
+
+
+def test_curate_funnel_job_budget(spark):
+    """Job count is the funnel's cost model (one-task jobs, driver
+    bound): a change that puts pair scoring back on the gate chain or
+    splits the audit aggregate shows up here as a count, not as
+    seconds inside host noise. Counted by job id, which covers jobs the
+    driver thread pool launches without a job group."""
+    from parallel_map_reduce_spark.operators.curation_pipeline import (
+        pipeline_curate_corpus,
+    )
+    from parallel_map_reduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    emb = load_table(spark, SF, "embeddings")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    rows = pipeline_curate_corpus(spark, docs, emb).collect()
+    jobs = dag.nextJobId() - first
+    assert len(rows) == 9
+    assert jobs <= FUNNEL_JOB_BUDGET, jobs
+
+
 def test_pq_adc_scoring_is_broadcast_and_partial_agg(spark):
     """The PQ ADC scoring plan: the (query, sub, code, partial-dot)
     table and the refine shortlist must come to the corpus as
